@@ -30,13 +30,16 @@ object Dedup {
       .drop("__graft_rn")
   }
 
-  /** Keep-latest as a HASH AGGREGATE instead of a window rank: max of
+  /** Keep-latest as an AGGREGATE instead of a window rank: max of
     * (orderBy…, full row) per key. Same winner as [[keepLatest]] under a
     * total order, with deterministic whole-row tie-breaks — but partial
     * aggregation combines map-side, so a hot key reaches the reducer as one
-    * row per map task instead of its full row set, and no sort happens at
-    * all. The skew-proof form for dedup at 100 TB; the window form remains
-    * for rank semantics beyond top-1. */
+    * row per map task instead of its full row set. The max-struct buffer
+    * holds strings, which a hash aggregate's fixed-width buffer cannot, so
+    * Spark plans it as a `SortAggregate`: each side sorts by the keys
+    * (`SortAggregate(key=[k], functions=[max(struct(…, __row))])`). The
+    * skew-proof form for dedup at 100 TB; the window form remains for rank
+    * semantics beyond top-1. */
   def keepOnePerKey(df: DataFrame, keys: Seq[String], orderBy: Seq[String]): DataFrame = {
     val best = struct((orderBy.map(col) :+
       struct(df.columns.map(col).toIndexedSeq: _*).as("__row")): _*)

@@ -91,6 +91,14 @@ object Diff {
     canonicalize(backtrack.select(keys.map(col): _*))
       .select(keys.map(k => col(k).as(bkName(k))): _*).distinct()
 
+  /** [[bkKeys]] plus, per key, the set of `location` values of its rows
+    * (a file URI is never an NA marker, so canonicalizing it is inert). */
+  private def bkKeysLocated(backtrack: DataFrame, keys: Seq[String],
+                            location: String): DataFrame =
+    canonicalize(backtrack.select((keys :+ location).map(col): _*))
+      .groupBy(keys.map(k => col(k).as(bkName(k))): _*)
+      .agg(collect_set(col(location)).as(location))
+
   private def keyCondition(l: DataFrame, r: DataFrame, keys: Seq[String],
                            nullSafe: Boolean): Column =
     keys.map { k =>
@@ -115,11 +123,18 @@ object Diff {
     * false = unseen (insert). One left join instead of an anti + a semi —
     * callers get both halves and their counts from a single cached plan,
     * which halves the job count of a sync (the reference pays the same
-    * split as two pandas merges; we pay one). */
+    * split as two pandas merges; we pay one).
+    *
+    * `location` names a column of `backtrack` that says where each stored
+    * row lives (a file). The output then carries that column as the array
+    * of locations of the row's key in the backtrack (null for unseen
+    * rows), so the apply can rewrite exactly the files holding updated
+    * keys. */
   def tagExisting(incoming: DataFrame, backtrack: DataFrame, keys: Seq[String],
                   nullSafe: Boolean = false,
                   flag: String = "__graft_update",
-                  salt: Int = 1): DataFrame = {
+                  salt: Int = 1,
+                  location: Option[String] = None): DataFrame = {
     val delta0 = filterUnseen(backtrack, incoming)
     // salt > 1 spreads a hot key over `salt` reducer partitions (pipes can
     // opt in via extras.skew_salt): the backtrack key set replicates salt×
@@ -129,7 +144,8 @@ object Diff {
     val delta = if (salt > 1)
       delta0.withColumn("__graft_salt", floor(rand(42) * salt).cast("int"))
     else delta0
-    val bt0 = bkKeys(backtrack, keys).withColumn("__graft_seen", lit(1))
+    val bt0 = location.map(bkKeysLocated(backtrack, keys, _)).getOrElse(bkKeys(backtrack, keys))
+      .withColumn("__graft_seen", lit(1))
     val bt = if (salt > 1)
       bt0.withColumn("__graft_bk_salt",
         explode(sequence(lit(0), lit(salt - 1)).cast("array<int>")))
@@ -139,8 +155,8 @@ object Diff {
       base && delta("__graft_salt") === bt("__graft_bk_salt")
     else base
     val j = delta.join(bt, cond, "left")
-    j.select(delta0.columns.map(c => delta(c)).toIndexedSeq :+
-      bt("__graft_seen").isNotNull.as(flag): _*)
+    j.select((delta0.columns.map(c => delta(c)).toIndexedSeq :+
+      bt("__graft_seen").isNotNull.as(flag)) ++ location.map(l => bt(l).as(l)): _*)
   }
 
   /** One-shot: diff incoming against the backtrack window and split.

@@ -300,9 +300,10 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     * with a one-bit tag, and each task routes its rows to the right
     * write id — the server-side per-wid layout is identical to two
     * separate stagings, so parse-once is preserved. */
-  override def applyDelta(updates: DataFrame, inserts: DataFrame,
+  override def applyDelta(delta: DataFrame, updateFlag: String,
                           keys: Seq[String], knownChunks: Option[Seq[String]],
-                          strayScan: StrayScan): Unit = {
+                          strayScan: StrayScan,
+                          located: Option[Seq[String]]): Unit = {
     require(keys.nonEmpty, "applyDelta requires key columns")
     val strayQ = strayScan match {
       case StrayScan.Full => Seq("stray" -> "full")
@@ -315,7 +316,8 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     val kcQ = knownChunks.map(c => Seq("kc" -> c.mkString("\n"))).getOrElse(Seq.empty)
     val widU = java.util.UUID.randomUUID().toString
     val widI = java.util.UUID.randomUUID().toString
-    stagePair(updates, widU, inserts, widI)
+    val inserts = delta.where(!col(updateFlag)).drop(updateFlag)
+    stagePair(delta.where(col(updateFlag)).drop(updateFlag), widU, inserts, widI)
     call("POST", u("commit", (Seq("wid" -> widI, "widU" -> widU,
       "mode" -> "delta", "schema" -> inserts.schema.toDDL,
       "keys" -> keys.mkString(",")) ++ strayQ ++ kcQ): _*))

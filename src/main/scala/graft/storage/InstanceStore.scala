@@ -51,18 +51,36 @@ trait InstanceStore {
              knownChunks: Option[Seq[String]] = None,
              strayScan: StrayScan = StrayScan.Full): Unit
 
-  /** Apply one diff's BOTH halves — update rows (chunk-scoped merge) and
-    * insert rows (append). Default: two calls, the local fast path (an
-    * append never pays a merge). REMOTE backends override to ship the
-    * tagged patch in ONE staged upload + ONE commit and split server-side:
-    * for a store a network away, the second round trip costs more than the
-    * split saves. Either half may be empty (callers skip all-empty calls). */
-  def applyDelta(updates: DataFrame, inserts: DataFrame, keys: Seq[String],
+  /** Apply one diff: `delta` holds its update and insert rows, told apart
+    * by the boolean column `updateFlag` (true = the row's key is stored
+    * and the row replaces it). Default: two calls — the update half merges
+    * chunk-scoped, the insert half appends (an append never pays a
+    * merge). REMOTE backends override to ship the tagged patch in ONE
+    * staged upload + ONE commit and split server-side: for a store a
+    * network away, the second round trip costs more than the split saves.
+    * Either half may be empty (callers skip all-empty calls).
+    *
+    * `located` is the set of [[rowLocation]] values of the rows the
+    * updates replace, as the diff found them in the backtrack slice. A
+    * store that supplies locations rewrites exactly those files in one
+    * write; the default ignores it (it is only ever set for stores whose
+    * `rowLocation` is defined). */
+  def applyDelta(delta: DataFrame, updateFlag: String, keys: Seq[String],
                  knownChunks: Option[Seq[String]] = None,
-                 strayScan: StrayScan = StrayScan.Full): Unit = {
-    upsert(updates, keys, knownChunks, strayScan)
-    append(inserts)
+                 strayScan: StrayScan = StrayScan.Full,
+                 located: Option[Seq[String]] = None): Unit = {
+    import org.apache.spark.sql.functions.col
+    upsert(delta.where(col(updateFlag)).drop(updateFlag), keys, knownChunks, strayScan)
+    append(delta.where(!col(updateFlag)).drop(updateFlag))
   }
+
+  /** Where a stored row lives, for stores that can rewrite single files:
+    * an expression that evaluates, on any frame this store's `read` or
+    * `readRange` returns (through projections and filters), to the file
+    * holding the row. The sync engine carries it through the diff and
+    * hands the update rows' files to [[applyDelta]]. None for stores
+    * without files. */
+  def rowLocation: Option[Column] = None
 
   // ── deletion / maintenance ───────────────────────────────────────────
   def clear(predicate: Column, boundLo: Option[Any] = None,

@@ -25,23 +25,30 @@ object StrayScan {
   *
   * Two layouts, chosen by whether the pipe has a datetime axis:
   *
-  *   - **time-partitioned** (`__graft_chunk = yyyy-MM of dt`): upserts use
-  *     dynamic partition overwrite and rewrite ONLY the chunks the patch
-  *     touches — the Spark equivalent of the reference bounding its
+  *   - **time-partitioned** (`__graft_chunk = yyyy-MM of dt`): every
+  *     rewrite reads a known set of data FILES, writes their surviving rows
+  *     plus the new rows once into a tmp dir, and swaps at file level. A
+  *     diff sync names the files that hold its updated keys (the diff's
+  *     backtrack scan carries `_metadata.file_path`, see [[rowLocation]]),
+  *     so updates and inserts land in ONE write that rewrites only those
+  *     files — the Spark equivalent of the reference bounding its
   *     UPDATE/MERGE join by the patch's MIN(dt)..MAX(dt)
-  *     (meerschaum/utils/sql.py:1920-1933). At 100 TB a day's late data
-  *     rewrites a month partition, not the table; reads prune partitions
-  *     from the same column.
+  *     (meerschaum/utils/sql.py:1920-1933). Callers without locations
+  *     (native-upsert mode, the HTTP server's delta commit, clear,
+  *     deduplicate) rewrite every file of the chunks they touch. At
+  *     100 TB a day's late data rewrites a few files, not the table; reads
+  *     prune partitions from the same column.
   *
   *   - **versioned snapshot** (no dt axis): each write lands in a fresh
-  *     `v_<n>/` directory and a `_CURRENT` pointer file flips to it —
-  *     atomic swap semantics like the reference's dedup table rebuild
-  *     (connectors/sql/_pipes.py:4037-4105) without in-place mutation.
+  *     `seg_<n>/` segment and a `_CURRENT` pointer flips to a manifest
+  *     listing the live segments — atomic swap semantics like the
+  *     reference's dedup table rebuild (connectors/sql/_pipes.py:4037-4105)
+  *     without in-place mutation.
   *
   * All merge logic is expressed as DataFrame joins so Catalyst handles
-  * pushdown/broadcast; nothing is collected to the driver except the list of
-  * affected partition values (bounded, as the reference caps partitions per
-  * sync at 10k — config/_default.py:111).
+  * pushdown/broadcast; nothing is collected to the driver except file and
+  * chunk lists (bounded, as the reference caps partitions per sync at
+  * 10k — config/_default.py:111).
   */
 final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     extends InstanceStore {
@@ -245,52 +252,95 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     s"$basePath/data"
   }
 
-  // ── crash-safe chunk swaps ──────────────────────────────────────────────
-  // Every partitioned rewrite lands in a tmp dir, then swaps. The INTENT
+  // ── crash-safe file swaps ──────────────────────────────────────────────
+  // Every partitioned rewrite (upsert, diff apply, clear, deduplicate)
+  // reads a known set of data FILES, writes their surviving rows plus any
+  // new rows ONCE into a tmp dir, then swaps at file level. The INTENT
   // file — written only after the tmp output is complete — names the tmp
-  // and records the expected FINAL state of every affected chunk dir:
-  // "R name" (a replacement part exists in tmp) or "C name" (the swap
-  // clears the chunk). Recovery rolls FORWARD deterministically from those
-  // tags; it never has to guess whether a live dir is the swap's output or
-  // a leftover to remove. The intent deletes FIRST during cleanup: once
-  // every part has moved into data/ the swap is final, and recovery must
-  // become a no-op before any cleanup starts. (The previous design kept a
-  // backup dir and deleted the intent LAST, which left a crash window —
-  // backup+tmp gone, intent still present — where recovery's
-  // fully-cleared-chunk heuristic deleted the only copy of every
-  // swapped-in chunk; tagged intents remove the heuristic entirely.)
+  // and lists every step: "A <chunk>/<file>" (move this tmp file into
+  // data/) and "D <chunk>/<file>" (delete this replaced live file).
+  // Recovery rolls FORWARD from those entries, and each step is
+  // idempotent: an A moves only while its tmp file exists, a D deletes
+  // only while its live file exists, so a crash mid-recovery just re-runs.
+  // A chunk dir left with no files is removed. The intent deletes FIRST
+  // during cleanup: once every step ran the swap is final, and recovery
+  // must become a no-op before any cleanup starts. Files of a chunk that
+  // the rewrite did not read stay untouched. Intents written by earlier
+  // releases carry dir-level tags ("R <chunk>": replace the dir with the
+  // tmp part, "C <chunk>": clear it) or bare dir names (the backup-dir
+  // protocol); the same parser rolls those forward.
   private def swapIntent = new Path(s"$basePath/.swap_intent")
   private def swapBackup = new Path(s"$basePath/.swap_backup")
 
-  private def swapChunks(tmp: String, affectedDirNames: Set[String]): Unit = {
-    val dataDir = new Path(dataPath)
-    val tmpParts = fs.listStatus(new Path(tmp)).map(_.getPath.getName)
-      .filter(_.startsWith(s"$PartCol=")).toSet
-    val entries = (affectedDirNames ++ tmpParts).toSeq.sorted
-      .map(n => (if (tmpParts(n)) "R " else "C ") + n)
+  private def hiddenName(n: String): Boolean = n.startsWith("_") || n.startsWith(".")
+
+  /** Data files directly under `dir` (what Spark's reader would scan). */
+  private def visibleFiles(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && !hiddenName(st.getPath.getName))
+      .map(_.getPath.getName)
+
+  private def chunkDirName(label: String): String =
+    s"$PartCol=${if (label == null) "__HIVE_DEFAULT_PARTITION__" else label}"
+
+  /** Every data file of the given chunks (null = the null-axis chunk), as
+    * "chunk/file" names relative to data/. */
+  private def chunkFiles(labels: Seq[String]): Seq[String] =
+    labels.distinct.flatMap { l =>
+      val dir = chunkDirName(l)
+      visibleFiles(new Path(dataPath, dir)).map(f => s"$dir/$f")
+    }
+
+  /** Write `content` (rows with the chunk column) into `tmpName`, then swap
+    * it in for the data files `replaced` — the one rewrite primitive. */
+  private def rewrite(content: DataFrame, replaced: Seq[String], tmpName: String): Unit = {
+    val tmp = new Path(s"$basePath/$tmpName")
+    content.write.mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(tmp.toString)
+    val added =
+      if (!fs.exists(tmp)) Seq.empty
+      else fs.listStatus(tmp).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartCol="))
+        .flatMap { d =>
+          val dir = d.getPath.getName
+          visibleFiles(d.getPath).map(f => s"$dir/$f")
+        }
     val out = fs.create(swapIntent, true)
-    try out.write((tmp.split('/').last +: entries).mkString("\n").getBytes("UTF-8"))
+    try out.write((tmpName +: (added.map("A " + _) ++ replaced.map("D " + _)))
+      .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    tmpParts.foreach { n =>
-      val live = new Path(dataDir, n)
-      if (fs.exists(live)) fs.delete(live, true)
-      fs.rename(new Path(tmp, n), live)
-    }
-    (affectedDirNames -- tmpParts).foreach { n =>
-      val live = new Path(dataDir, n)
-      if (fs.exists(live)) fs.delete(live, true)
-    }
+    rollForward(tmp, added, replaced)
     fs.delete(swapIntent, false)
-    fs.delete(new Path(tmp), true)
+    fs.delete(tmp, true)
   }
 
-  /** Complete an interrupted chunk swap by rolling FORWARD from the tagged
-    * intent (see above):
-    *   - "R": part still in tmp → superseded live (if any) deletes, part
-    *     moves in; part gone → it already moved, the live dir IS the swap
-    *     output: keep;
-    *   - "C": live deletes if present (the clear rolls forward); absent →
-    *     already final.
+  /** The A/D steps of a file swap (see above); idempotent. */
+  private def rollForward(tmp: Path, added: Seq[String], deleted: Seq[String]): Unit = {
+    val dataDir = new Path(dataPath)
+    added.foreach { rel =>
+      val part = new Path(tmp, rel)
+      if (fs.exists(part)) {
+        val live = new Path(dataDir, rel)
+        fs.mkdirs(live.getParent)
+        if (fs.exists(live)) fs.delete(live, false)
+        if (!fs.rename(part, live))
+          throw new java.io.IOException(s"could not move $part to $live")
+      }
+    }
+    deleted.foreach(rel => fs.delete(new Path(dataDir, rel), false))
+    deleted.map(_.takeWhile(_ != '/')).distinct.foreach { dir =>
+      val d = new Path(dataDir, dir)
+      if (fs.exists(d) && visibleFiles(d).isEmpty) fs.delete(d, true)
+    }
+  }
+
+  /** Complete an interrupted swap by rolling FORWARD from its intent:
+    *   - "A"/"D": see [[rollForward]];
+    *   - "R" (earlier releases): part still in tmp → superseded live (if
+    *     any) deletes, part moves in; part gone → it already moved, the
+    *     live dir IS the swap output: keep;
+    *   - "C" (earlier releases): live deletes if present (the clear rolls
+    *     forward); absent → already final.
     * Every step is idempotent, so a crash mid-recovery just re-runs. */
   private def recoverSwap(): Unit = {
     if (!fs.exists(swapIntent)) return
@@ -300,19 +350,23 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     finally in.close()
     val tmp     = new Path(s"$basePath/${lines.head}")
     val dataDir = new Path(dataPath)
-    val tagged  = lines.tail.forall(e => e.startsWith("R ") || e.startsWith("C "))
+    val tagged  = lines.tail.forall(e => e.length > 2 && "RCAD".contains(e.head) && e(1) == ' ')
     if (tagged) {
-      lines.tail.foreach { entry =>
-        val (tag, n) = (entry.take(1), entry.drop(2))
+      val byTag = lines.tail.groupBy(_.take(1)).map { case (t, es) => t -> es.map(_.drop(2)) }
+        .withDefaultValue(Seq.empty)
+      byTag("R").foreach { n =>
         val live = new Path(dataDir, n)
         val part = new Path(tmp, n)
-        if (tag == "R") {
-          if (fs.exists(part)) {
-            if (fs.exists(live)) fs.delete(live, true)
-            fs.rename(part, live)
-          }
-        } else if (fs.exists(live)) fs.delete(live, true)
+        if (fs.exists(part)) {
+          if (fs.exists(live)) fs.delete(live, true)
+          fs.rename(part, live)
+        }
       }
+      byTag("C").foreach { n =>
+        val live = new Path(dataDir, n)
+        if (fs.exists(live)) fs.delete(live, true)
+      }
+      rollForward(tmp, byTag("A"), byTag("D"))
     } else {
       // PRE-TAG intent (written by an earlier release that crashed before
       // this upgrade): entries are bare dir names and the old backup-dir
@@ -677,12 +731,11 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
   }
 
   /** Upsert: replace rows whose keys collide, insert the rest.
-    * Partitioned pipes rewrite only the chunks present in the patch.
-    * `strayScan` bounds the dt-moving-update guard (see [[StrayScan]]):
-    * the sync engine passes the backtrack window in diff mode, so the
-    * steady-state incremental path scans only the window's chunks; the
-    * full scan remains the correctness default for native-upsert pipes,
-    * where an old row can live anywhere. */
+    * Partitioned pipes rewrite every file of the chunks present in the
+    * patch (plus the stray chunks below) through the file-level
+    * [[rewrite]]. `strayScan` bounds the dt-moving-update guard (see
+    * [[StrayScan]]): the full scan is the correctness default for
+    * native-upsert pipes, where an old row can live anywhere. */
   override def upsert(patch: DataFrame, keys: Seq[String],
              knownChunks: Option[Seq[String]] = None,
              strayScan: StrayScan = StrayScan.Full): Unit = { withWriteLease {
@@ -709,11 +762,10 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
             // Candidate stray chunks from ONE driver-side directory listing
             // (a metadata call, size-independent): chunks inside the stray
             // bound that the patch is not already rewriting. The common
-            // diff-sync case — the backtrack envelope covers exactly the
-            // patch's own chunks — yields NO candidates and skips the key
-            // scan (and its mergeSchema footer pass) entirely; otherwise
-            // the scan is partition-pruned to the candidate dirs, never
-            // the table.
+            // case — the bound covers exactly the patch's own chunks —
+            // yields NO candidates and skips the key scan (and its
+            // mergeSchema footer pass) entirely; otherwise the scan is
+            // partition-pruned to the candidate dirs, never the table.
             val onDisk = diskChunkLabels
             val inBound = strayScan match {
               case StrayScan.Bounded(lo, hi) =>
@@ -731,7 +783,7 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
             // (Bounded's range predicate excluded them before this rewrite
             // too) and only when the patch has no null-chunk rows of its own
             val nullCand = strayScan == StrayScan.Full && !patchOnly._1 &&
-              fs.exists(new Path(s"$dataPath/$PartCol=__HIVE_DEFAULT_PARTITION__"))
+              fs.exists(new Path(s"$dataPath/${chunkDirName(null)}"))
             if (candidates.isEmpty && !nullCand) Array.empty
             else {
               val all = readChunks(candidates, nullCand)
@@ -744,22 +796,10 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
                 .select(PartCol).distinct().collect().map(_.getString(0))
             }
           }
-        val merged = (chunkVals ++ strayVals).distinct
-        val (nullChunk, vals) = (merged.contains(null), merged.filter(_ != null).toSeq)
-        val current = readChunks(vals, nullChunk)
-        val keyCond = keys.map { k =>
-          if (spec.nullIndices) current(k) <=> p(k) else current(k) === p(k)
-        }.reduce(_ && _)
-        val keep   = current.join(p.select(keys.map(col): _*).distinct(), keyCond, "left_anti")
-        val mergedDf = keep.unionByName(p, allowMissingColumns = true)
-        val tmp    = s"$basePath/.merge_tmp"
-        mergedDf.write.mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(tmp)
-        // crash-safe swap: every affected dir (a stray chunk can lose ALL
-        // its rows and then has no tmp output) moves to backup before the
-        // rewritten dirs move in — see swapChunks/recoverSwap
-        val affectedDirNames = (vals.map(v => s"$PartCol=$v") ++
-          (if (nullChunk) Seq(s"$PartCol=__HIVE_DEFAULT_PARTITION__") else Nil)).toSet
-        swapChunks(tmp, affectedDirNames)
+        val merged = (chunkVals ++ strayVals).distinct.toSeq
+        val (nullChunk, vals) = (merged.contains(null), merged.filter(_ != null))
+        merge(readChunks(vals, nullChunk), chunkFiles(merged),
+          p.select(keys.map(col): _*).distinct(), p, keys)
       } finally p.unpersist()
     } else {
       // Segment-pruned merge: ONE key-column semi-join over the snapshot
@@ -799,6 +839,84 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     // reconciles any width difference.
     recordWrittenSchema(patch.schema, replace = false, fpBefore)
   }
+  }
+
+  /** One diff's both halves in ONE write on partitioned pipes when the
+    * engine `located` the update rows' old files (see [[rowLocation]]):
+    * (rows of those files minus the update keys) ∪ the delta lands in
+    * `.merge_tmp` and swaps in for exactly those files. Nothing else of
+    * their chunks is read or rewritten — the file-level form of the
+    * reference's dt-bounded UPDATE/MERGE (utils/sql.py:1920-1933). A
+    * located file that vanished since the diff (a concurrent compact, a
+    * manual delete) fails the apply loudly before anything is written;
+    * the engine's retry then re-diffs against the current files. Without
+    * locations: upsert, then append. */
+  override def applyDelta(delta: DataFrame, updateFlag: String, keys: Seq[String],
+                          knownChunks: Option[Seq[String]] = None,
+                          strayScan: StrayScan = StrayScan.Full,
+                          located: Option[Seq[String]] = None): Unit =
+    located match {
+      case Some(locs) if partitioned => withWriteLease {
+        require(keys.nonEmpty, "applyDelta requires key columns")
+        val rows = delta.drop(updateFlag)
+        if (!exists) { create(rows); return }
+        val fpBefore = schemaFingerprint()
+        val files = locatedFiles(locs)
+        // no distinct on the key side: an anti join's result does not
+        // depend on build-side duplicates, and the engine's materialized
+        // delta broadcasts as it is
+        merge(readFiles(files), files,
+          delta.where(col(updateFlag)).select(keys.map(col): _*), withChunk(rows), keys)
+        recordWrittenSchema(rows.schema, replace = false, fpBefore)
+      }
+      case _ => super.applyDelta(delta, updateFlag, keys, knownChunks, strayScan, located)
+    }
+
+  /** `_metadata.file_path` of the parquet scan; snapshot (non-partitioned)
+    * pipes keep their segment-pruned merge and supply no locations. */
+  override def rowLocation: Option[Column] =
+    if (partitioned) Some(col("_metadata.file_path")) else None
+
+  /** Located file URIs → "chunk/file" names under data/, each verified to
+    * still exist (one listing per chunk dir). */
+  private def locatedFiles(locs: Seq[String]): Seq[String] = {
+    val rel = locs.distinct.map { l =>
+      // Spark reports file paths URI-encoded; a raw path is taken as is
+      val p = scala.util.Try(new Path(new java.net.URI(l))).getOrElse(new Path(l))
+      s"${p.getParent.getName}/${p.getName}"
+    }.distinct
+    val missing = rel.groupBy(_.takeWhile(_ != '/')).toSeq.flatMap { case (dir, names) =>
+      val present = visibleFiles(new Path(dataPath, dir)).map(f => s"$dir/$f").toSet
+      names.filterNot(present)
+    }
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"${missing.size} located file(s) of ${spec.targetName} vanished before the " +
+        s"apply (e.g. ${missing.head}); the diff must run again")
+    rel
+  }
+
+  /** Rows of the given data files ("chunk/file" under data/), with the
+    * chunk column. */
+  private def readFiles(files: Seq[String]): DataFrame = {
+    val schema = PipeStorage.schemaCacheGet(basePath, () => schemaFingerprint())
+      .getOrElse(stripPart(openData(Seq(dataPath), cacheable = true).schema))
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        schema.add(PartCol, org.apache.spark.sql.types.StringType))
+    else spark.read.schema(schema).option("basePath", dataPath)
+      .parquet(files.map(f => s"$dataPath/$f"): _*)
+  }
+
+  /** Replace `files` by (`current` minus the keys in `pk`) ∪ `rows`:
+    * `current` holds the rows of exactly those files, `pk` the key columns
+    * to drop from them, `rows` the new rows with the chunk column. */
+  private def merge(current: DataFrame, files: Seq[String], pk: DataFrame,
+                    rows: DataFrame, keys: Seq[String]): Unit = {
+    val cond = keys.map { k =>
+      if (spec.nullIndices) current(k) <=> pk(k) else current(k) === pk(k)
+    }.reduce(_ && _)
+    rewrite(current.join(pk, cond, "left_anti").unionByName(rows, allowMissingColumns = true),
+      files, ".merge_tmp")
   }
 
   /** Write `df` as the next segment, point a new manifest at
@@ -844,12 +962,8 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
       // keep = "predicate IS NOT TRUE": a bare `!predicate` is NULL for
       // rows where the predicate evaluates NULL (e.g. params equality on a
       // NULL column) and `where` would DROP them — SQL DELETE keeps them
-      val kept     = affected.where(!(predicate <=> lit(true)))
-      val tmp      = s"$basePath/.clear_tmp"
-      kept.write.mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(tmp)
-      val affectedDirNames = (vals.map(v => s"$PartCol=$v") ++
-        (if (nullChunk) Seq(s"$PartCol=__HIVE_DEFAULT_PARTITION__") else Nil)).toSet
-      swapChunks(tmp, affectedDirNames)
+      rewrite(affected.where(!(predicate <=> lit(true))),
+        chunkFiles(affectedVals.toSeq), ".clear_tmp")
     } else {
       // segment-pruned clear: only the segments holding matching rows
       // rewrite (minus the cleared rows); the rest carry over untouched
@@ -915,15 +1029,12 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
         if (nullChunk) in || col(PartCol).isNull else in
       }
       // full rows shuffle only for the losing chunks' slice of the table —
-      // ranked as a HASH AGGREGATE (map-side combined), not a window sort:
-      // a hot key reaches the reducer as one row per map task, so skewed
-      // duplicates cannot pin a single task ([[graft.ops.Dedup.keepOnePerKey]])
-      val survivors = graft.ops.Dedup.keepOnePerKey(df.where(chunkPred), keys, order)
-      val tmp = s"$basePath/.dedup_tmp"
-      survivors.write.mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(tmp)
-      val affectedDirNames = (vals.map(v => s"$PartCol=$v") ++
-        (if (nullChunk) Seq(s"$PartCol=__HIVE_DEFAULT_PARTITION__") else Nil)).toSet
-      swapChunks(tmp, affectedDirNames)
+      // ranked by a max-struct aggregate with a map-side partial step, not
+      // a window: a hot key reaches the reducer as one row per map task, so
+      // skewed duplicates cannot pin a single task
+      // ([[graft.ops.Dedup.keepOnePerKey]])
+      rewrite(graft.ops.Dedup.keepOnePerKey(df.where(chunkPred), keys, order),
+        chunkFiles(vals ++ (if (nullChunk) Seq(null) else Nil)), ".dedup_tmp")
       removed
     } else {
       val cur     = read
@@ -1044,16 +1155,19 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
   override def rowCount: Long = {
     if (!exists) return 0L
     ensureRecovered()
-    val roots = (if (partitioned) Seq(dataPath) else segDirs).map(new Path(_))
+    // roots qualified like the listed paths (scheme + authority): a
+    // scheme-less root never equals a listed ancestor, and the walk below
+    // would then climb past it and judge the root's own ancestors
+    val roots = (if (partitioned) Seq(dataPath) else segDirs)
+      .map(d => fs.makeQualified(new Path(d)))
     def hiddenUnder(p: Path, root: Path): Boolean = {
       var cur = p.getParent
       while (cur != null && cur != root) {
         val n = cur.getName
-        if ((n.startsWith("_") || n.startsWith(".")) && !n.contains("=")) return true
+        if (hiddenName(n) && !n.contains("=")) return true
         cur = cur.getParent
       }
-      val leaf = p.getName
-      leaf.startsWith("_") || leaf.startsWith(".")
+      hiddenName(p.getName)
     }
     val files = roots.filter(fs.exists(_)).flatMap { r =>
       val it = fs.listFiles(r, true)

@@ -19,7 +19,8 @@ import graft.storage.{PipeStorage, StrayScan}
   *   backtrack read (dt-bounded target slice) →
   *   full-row delta (anti-join on canonical hash) →
   *   unseen/update split on sync keys →
-  *   append unseen + upsert update (chunk-scoped rewrite)
+  *   apply: ONE write rewriting only the files that hold updated keys
+  *   (stores with row locations), else append unseen + upsert update
   *
   * The backtrack slice is bounded by the batch's own MIN/MAX dt ±1 minute —
   * the reference's heuristic (core/Pipe/_sync.py:860-896) — so the diff join
@@ -409,7 +410,7 @@ final class SyncEngine(spark: SparkSession, root: String,
       val patch = tagAgainstTarget(spec, store, targetAligned,
         dedupeBatch(spec, batchAligned), keys, envelope, diff = false).cache()
       try {
-        val (nIns, nUpd, chunks) = countsAndChunks(store, patch, allRows = true)
+        val (nIns, nUpd, chunks, _) = countsAndChunks(store, patch, allRows = true)
         store.upsert(patch.drop(UpdFlag), keys, chunks, StrayScan.Full)
         commitMark()
         SyncResult(nIns, nUpd)
@@ -417,21 +418,24 @@ final class SyncEngine(spark: SparkSession, root: String,
     } else {
       // 6. diff-then-apply: delta rows tagged update/insert by ONE left join;
       //    counts + affected chunks come from ONE aggregate over the cached
-      //    delta; updates merge chunk-scoped, inserts append. Update rows
-      //    were DETECTED inside the backtrack window, so their old chunks
-      //    are provably within it — the stray guard prunes to that window
-      //    instead of scanning the table.
+      //    delta. A store with row locations gets the update rows' files
+      //    from that same aggregate and lands both halves in one write that
+      //    rewrites only those files. Otherwise updates merge chunk-scoped
+      //    and inserts append; update rows were DETECTED inside the
+      //    backtrack window, so their old chunks are provably within it —
+      //    the stray guard prunes to that window instead of scanning the
+      //    table.
       val tagged = tagAgainstTarget(spec, store, targetAligned,
         dedupeBatch(spec, batchAligned), keys, envelope, diff = true).cache()
       try {
-        val (nIns, nUpd, chunks) = countsAndChunks(store, tagged, allRows = false)
+        val (nIns, nUpd, chunks, located) = countsAndChunks(store, tagged, allRows = false)
         val stray = envelope.map { case (lo, hi) => StrayScan.Bounded(lo, hi): StrayScan }
           .getOrElse(StrayScan.Full)
-        val upd = tagged.where(col(UpdFlag)).drop(UpdFlag)
-        val ins = tagged.where(!col(UpdFlag)).drop(UpdFlag)
-        if (nUpd > 0 && nIns > 0) store.applyDelta(upd, ins, keys, chunks, stray)
-        else if (nUpd > 0) store.upsert(upd, keys, chunks, stray)
-        else if (nIns > 0) store.append(ins)
+        val delta = tagged.drop(LocCol)
+        if (nUpd > 0 && (nIns > 0 || located.isDefined))
+          store.applyDelta(delta, UpdFlag, keys, chunks, stray, located)
+        else if (nUpd > 0) store.upsert(delta.where(col(UpdFlag)).drop(UpdFlag), keys, chunks, stray)
+        else if (nIns > 0) store.append(delta.where(!col(UpdFlag)).drop(UpdFlag))
         commitMark()
         SyncResult(nIns, nUpd)
       } finally tagged.unpersist()
@@ -439,6 +443,9 @@ final class SyncEngine(spark: SparkSession, root: String,
   }
 
   private val UpdFlag = "__graft_update"
+  /** Diff-mode column: the store's [[graft.storage.InstanceStore.rowLocation]]
+    * values of an update row's key in the backtrack slice. */
+  private val LocCol = "__graft_loc"
 
   /** Write inferred/evolved dtypes back into the registered spec — the
     * reference persists newly detected dtypes into the pipe's parameters at
@@ -488,8 +495,12 @@ final class SyncEngine(spark: SparkSession, root: String,
         s"extras.skew_salt must be a positive integer, got '$s'")
       s.toInt
     }.getOrElse(1)
-    if (diff) Diff.tagExisting(batch, backtrack, keys, spec.nullIndices, UpdFlag, salt)
-    else {
+    if (diff) {
+      val location = store.rowLocation
+      Diff.tagExisting(batch,
+        location.map(backtrack.withColumn(LocCol, _)).getOrElse(backtrack),
+        keys, spec.nullIndices, UpdFlag, salt, location.map(_ => LocCol))
+    } else {
       // backtrack keys aliased before the join — batch and backtrack can
       // share lineage (see Diff's bkKeys rationale)
       val bt = backtrack
@@ -505,14 +516,18 @@ final class SyncEngine(spark: SparkSession, root: String,
     }
   }
 
-  /** Single-aggregate reporting: (inserted, updated, affected chunk labels).
-    * Chunk labels are collected for the rows the storage merge will rewrite
-    * (all rows in upsert mode, update rows in diff mode) so `upsert` skips
-    * its own distinct+collect job. */
+  /** Single-aggregate reporting: (inserted, updated, affected chunk labels,
+    * located files). Chunk labels are collected for the rows the storage
+    * merge will rewrite (all rows in upsert mode, update rows in diff mode)
+    * so `upsert` skips its own distinct+collect job; when `tagged` carries
+    * update rows' locations, their distinct union rides the same
+    * aggregate. */
   private def countsAndChunks(store: graft.storage.InstanceStore, tagged: DataFrame,
-                              allRows: Boolean): (Long, Long, Option[Seq[String]]) = {
+                              allRows: Boolean)
+      : (Long, Long, Option[Seq[String]], Option[Seq[String]]) = {
     val chunkOf = store.chunkLabel
     val relevant = if (allRows) lit(true) else col(UpdFlag)
+    val located = tagged.columns.contains(LocCol)
     val aggs = Seq(
       count(lit(1)).as("n"),
       sum(when(col(UpdFlag), 1L).otherwise(0L)).as("nUpd")) ++
@@ -521,7 +536,10 @@ final class SyncEngine(spark: SparkSession, root: String,
         // bounded (≤10k per the reference's partitions-per-sync cap)
         collect_set(when(relevant, c)).as("chunks"),
         max(when(relevant && c.isNull, 1).otherwise(0)).as("hasNullChunk"))
-      }
+      } ++
+      // collect_set state ≤ the distinct location arrays of update keys,
+      // bounded by the files of the backtrack window
+      (if (located) Seq(flatten(collect_set(col(LocCol))).as("files")) else Nil)
     val row = tagged.agg(aggs.head, aggs.tail: _*).head()
     val n    = row.getLong(0)
     val nUpd = Option(row.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -531,7 +549,8 @@ final class SyncEngine(spark: SparkSession, root: String,
       val hasNull = Option(row.get(3)).exists(_.asInstanceOf[Int] > 0)
       if (hasNull) vals :+ null else vals
     }
-    (n - nUpd, nUpd, chunks)
+    val files = if (located) Some(row.getSeq[String](row.length - 1).distinct) else None
+    (n - nUpd, nUpd, chunks, files)
   }
 
   /** Keys for the unseen/update split; fall back to all columns (pure
@@ -543,9 +562,12 @@ final class SyncEngine(spark: SparkSession, root: String,
 
   /** Collapse intra-batch duplicates before diffing (the reference's chunk
     * dedup: one row per key, latest by the dt axis wins). Shaped as a
-    * max-struct HASH AGGREGATE, not a sort+window: partial aggregation
-    * combines map-side, so a hot key reduces before it shuffles and nothing
-    * sorts — the right form for a dedup-to-one-row at any scale. */
+    * max-struct aggregate, not a window: partial aggregation combines
+    * map-side, so a hot key reduces before it shuffles. A max over a
+    * struct with string fields has no fixed-width buffer, so Spark plans
+    * it as a `SortAggregate` (partial and final), which sorts each
+    * partition by the keys; a window would sort the full rows after the
+    * shuffle without the map-side reduction. */
   private def dedupeBatch(spec: PipeSpec, batch: DataFrame): DataFrame = {
     val keys = spec.columns.syncKeys.filter(batch.columns.contains)
     if (keys.isEmpty || keys.size == batch.columns.length) batch.distinct()

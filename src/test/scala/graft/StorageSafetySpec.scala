@@ -496,3 +496,155 @@ class SchemaCacheFingerprintSpec extends SparkSpec {
     assert(again.where(col("extra_col") === 42L).count() == 1)
   }
 }
+
+/** A local filesystem under the `crashfs` scheme that throws at a chosen
+  * step of a file swap — the n-th rename, the n-th data-file delete, or
+  * the intent delete — counting only after the swap's intent file is
+  * created. Data written through it lands on the local disk as usual, so
+  * a fresh handle can reopen the crashed table. */
+class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    if (f.getName == ".swap_intent") CrashFs.armed = true
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashFs.step("A"); super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    if (p.getName == ".swap_intent") { CrashFs.step("intent"); CrashFs.armed = false }
+    else CrashFs.step("D")
+    super.delete(p, recursive)
+  }
+}
+
+object CrashFs {
+  @volatile var armed = false
+  @volatile var crashAt: Option[(String, Int)] = None
+  @volatile var fired = false
+  private val seen = scala.collection.mutable.Map.empty[String, Int]
+  def arm(kind: String, n: Int): Unit = synchronized {
+    seen.clear(); crashAt = Some((kind, n)); fired = false; armed = false
+  }
+  def disarm(): Unit = synchronized { crashAt = None; armed = false }
+  def step(kind: String): Unit = synchronized {
+    if (armed && crashAt.isDefined) {
+      seen(kind) = seen.getOrElse(kind, 0) + 1
+      if (crashAt.contains((kind, seen(kind)))) {
+        crashAt = None; fired = true
+        throw new java.io.IOException(s"injected crash at $kind #${seen(kind)}")
+      }
+    }
+  }
+}
+
+/** Crash points of the file-level swap a located diff apply performs
+  * (intent "A <chunk>/<file>" moves, "D <chunk>/<file>" deletes), and a
+  * located file that vanishes between the diff and the apply. */
+class FileSwapRecoverySpec extends SparkSpec {
+  import spark.implicits._
+
+  spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+
+  private val spec = PipeSpec(PipeKeys("safe", "fileswap"),
+    columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "id")))
+
+  /** `n` rows from id `lo`, 6 h apart from March 28th: a batch spans the
+    * March/April chunk boundary. `changed` ids carry a new value. */
+  private def batch(lo: Int, n: Int, changed: Set[Int] = Set.empty) =
+    (lo until lo + n).map { i =>
+      (java.sql.Timestamp.valueOf(java.time.LocalDateTime.of(2024, 3, 28, 0, 0)
+        .plusHours(6L * i)), i.toLong, if (changed(i)) s"v$i'" else s"v$i")
+    }.toDF("ts", "id", "v")
+
+  /** Two syncs of history, then the batch under test: it re-sends ids
+    * 30-39 (half changed) and adds 40-59. */
+  private def setUp(root: String): Unit = {
+    val eng = new SyncEngine(spark, root)
+    eng.sync(spec, batch(0, 20))
+    eng.sync(spec, batch(15, 25, changed = Set(16, 18)))
+  }
+  private val last = batch(30, 30, changed = Set(30, 32, 34, 36, 38))
+
+  private def table(root: String): Seq[(Long, String)] =
+    new SyncEngine(spark, root).getData(spec).select($"id", $"v")
+      .as[(Long, String)].collect().sorted.toSeq
+
+  private def intent(root: String) =
+    new java.io.File(s"${root.stripPrefix("crashfs://")}/${spec.targetName}/.swap_intent")
+
+  private lazy val uninterrupted: Seq[(Long, String)] = {
+    val root = tmpDir()
+    setUp(root)
+    new SyncEngine(spark, root).sync(spec, last)
+    table(root)
+  }
+
+  Seq(("A", 1) -> "intent written, nothing moved",
+      ("A", 2) -> "some A files moved",
+      ("D", 1) -> "all A files moved, D pending",
+      ("intent", 1) -> "D done, intent still present").foreach { case ((kind, n), what) =>
+    test(s"file-swap crash: $what — reopen + vacuum gives the uninterrupted table") {
+      val root = s"crashfs://${tmpDir()}"
+      setUp(root)
+      CrashFs.arm(kind, n)
+      try {
+        val e = intercept[Exception](new SyncEngine(spark, root, retries = 1).sync(spec, last))
+        assert(CrashFs.fired, s"crash point $kind #$n never reached: $e")
+      } finally CrashFs.disarm()
+      assert(intent(root).exists(), "the crash must leave the swap intent behind")
+      new SyncEngine(spark, root).storage(spec).vacuum()
+      assert(!intent(root).exists())
+      assert(table(root) == uninterrupted)
+      assert(uninterrupted.map(_._1) == (0L until 60L))
+    }
+  }
+
+  test("a located file that vanished before the apply fails the attempt; the retry converges") {
+    val root = tmpDir()
+    setUp(root)
+    // the first apply finds its located files rewritten under it (a
+    // compact between the diff and the apply renames every file)
+    val compacted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val factory = (s: org.apache.spark.sql.SparkSession, r: String, sp: PipeSpec) => {
+      val inner = new PipeStorage(s, r, sp)
+      java.lang.reflect.Proxy.newProxyInstance(
+        classOf[graft.storage.InstanceStore].getClassLoader,
+        Array(classOf[graft.storage.InstanceStore]),
+        (_: Any, m: java.lang.reflect.Method, args: Array[AnyRef]) => {
+          if (m.getName == "applyDelta" && compacted.compareAndSet(false, true)) inner.compact()
+          try m.invoke(inner, Option(args).getOrElse(Array.empty[AnyRef]): _*)
+          catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
+        }).asInstanceOf[graft.storage.InstanceStore]
+    }
+    val r = new SyncEngine(spark, root, retryBaseSleepMs = 1, storeFactory = factory)
+      .sync(spec, last)
+    assert(compacted.get())
+    assert(r.attempts == 2, r.attemptErrors)
+    assert(r.attemptErrors.head.contains("vanished"), r.attemptErrors)
+    assert((r.inserted, r.updated) == ((20L, 5L)))
+    assert(table(root) == uninterrupted, "no row lost or duplicated")
+  }
+}
+
+/** `rowCount` sums parquet footers of the files `read` would scan; a
+  * `.`/`_`-named ANCESTOR of a scheme-less root must not hide them. */
+class RowCountHiddenAncestorSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("rowCount counts the table under a scheme-less root inside a .hidden dir") {
+    val root = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(tmpDir(), ".hidden", "pipes")).toString
+    val eng = new SyncEngine(spark, root)
+    val spec = PipeSpec(PipeKeys("safe", "hiddenroot"),
+      columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "id")))
+    val df = (0 until 7).map(i => (java.sql.Timestamp.valueOf(s"2024-01-0${i + 1} 10:00:00"), i.toLong))
+      .toDF("ts", "id")
+    assert(eng.sync(spec, df).inserted == 7)
+    assert(eng.storage(spec).rowCount == 7)
+  }
+}
