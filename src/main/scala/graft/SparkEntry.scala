@@ -473,6 +473,15 @@ object SparkEntry {
     srcDir
   }
 
+  /** The parquet file of quarter `q` in a `partitionBy("__q")` staging
+    * write. An empty quarter writes no `__q=q` directory, so this fails
+    * naming the quarter instead of dereferencing a null listing. */
+  private[graft] def stagedQuarterFile(tmp: String, q: Int): java.io.File =
+    Option(new java.io.File(s"$tmp/__q=$q").listFiles()).toSeq.flatten
+      .find(_.getName.endsWith(".parquet")).getOrElse(throw new IllegalStateException(
+        s"quarter $q (event_id % 4 == $q) of the staged events is empty: " +
+          s"no parquet file under $tmp/__q=$q"))
+
   /** Stage the events table plus two far-future sentinel rows (user_id −1,
     * 2030/2031) as separate stream files. With `maxFilesPerTrigger = 1`
     * each sentinel forms its own micro-batch, driving the watermark past
@@ -2436,8 +2445,7 @@ object SparkEntry {
           .repartition(col("__q"))
           .write.partitionBy("__q").mode("overwrite").parquet(tmp)
         qs.foreach { i =>
-          val f = new java.io.File(s"$tmp/__q=$i").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
+          val f = stagedQuarterFile(tmp, i)
           java.nio.file.Files.copy(f.toPath,
             java.nio.file.Paths.get(s"$srcDir/${names(i)}"))
         }

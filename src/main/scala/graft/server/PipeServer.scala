@@ -179,8 +179,7 @@ final class PipeServer(
         respond(x, 200, "ok")
 
       case ("POST", "commit") =>
-        val t0 = System.nanoTime()
-        val (spec, st) = store(root, target)
+        val (_, st) = store(root, target)
         val wid = q("wid")
         val schema = StructType.fromDDL(q("schema"))
         val files = selectStaged(wid)
@@ -217,13 +216,8 @@ final class PipeServer(
                   .json(filesU.map(_.getAbsolutePath): _*)
                 else spark.createDataFrame(
                   spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-              def half(idx: Int)(body: => Unit): Unit = {
-                val t = System.nanoTime(); body
-                if (sys.env.contains("GRAFT_API_TRACE"))
-                  println(f"[srv]   delta-$idx%d ${(System.nanoTime() - t) / 1e6}%8.1f ms")
-              }
-              half(1)(st.upsert(dfU, keys, kc, stray))
-              half(2)(st.append(df))
+              st.upsert(dfU, keys, kc, stray)
+              st.append(df)
             }
           case m => throw new IllegalArgumentException(s"unknown mode: $m")
         } finally {
@@ -232,10 +226,6 @@ final class PipeServer(
             d.listFiles().foreach(_.delete()); d.delete(); ()
           }
         }
-        if (sys.env.contains("GRAFT_API_TRACE"))
-          println(f"[srv] commit mode=${q("mode")} files=${files.size} " +
-            f"${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-        val _ = spec
         respond(x, 200, "ok")
 
       case ("POST", "clear") =>

@@ -27,10 +27,14 @@ import graft.sources.HttpFetch
   * write lease), so patch data never funnels through the client driver.
   * Reads materialize eagerly (fetch + localCheckpoint) to give the same
   * snapshot semantics as the other backends — a lazy HTTP scan could
-  * observe its own sync's mutation mid-plan. Row volume on this path is
-  * patch-scale by construction (the engine diffs before it writes); bulk
-  * analytical reads belong on the parquet backend directly, exactly as in
-  * the reference deployment.
+  * observe its own sync's mutation mid-plan. On the sync path reads are
+  * window-scale: the engine takes the target's schema from [[schemaDdl]]
+  * (cached process-wide, one GET at most) and fetches only the backtrack
+  * window through `readRange`; `read` (the whole table) runs only for a
+  * type-promotion rewrite or a pipe without a datetime envelope. Writes
+  * are patch-scale by construction (the engine diffs before it writes);
+  * bulk analytical reads belong on the parquet backend directly, exactly
+  * as in the reference deployment.
   *
   * Errors surface as the server-side exception class where the engine's
   * contracts depend on it (IllegalArgument/IllegalState), else IOException.
@@ -526,12 +530,6 @@ object ApiStore {
 
   /** Raw request: (status, body). */
   private def request(method: String, url: String): (Int, String) = {
-    val t0 = System.nanoTime()
-    try requestInner(method, url)
-    finally if (sys.env.contains("GRAFT_API_TRACE"))
-      println(f"[api] ${(System.nanoTime() - t0) / 1e6}%8.1f ms  $method ${url.takeWhile(_ != '?')} ${url.dropWhile(_ != '?').take(60)}")
-  }
-  private def requestInner(method: String, url: String): (Int, String) = {
     val b = HttpRequest.newBuilder(URI.create(url))
     val req = method match {
       case "GET"    => b.GET()

@@ -4,6 +4,7 @@ import java.time.{Duration, LocalDateTime}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.PipeSpec
 import graft.dsl.ParamsFilter
@@ -15,7 +16,8 @@ import graft.storage.{PipeStorage, StrayScan}
   * (meerschaum/core/Pipe/_data.py:22-318), re-expressed as one Catalyst plan
   * per phase:
   *
-  *   enforce dtypes → autotime → schema evolution →
+  *   enforce dtypes → autotime →
+  *   schema evolution (against the target's stored SCHEMA, not its rows) →
   *   backtrack read (dt-bounded target slice) →
   *   full-row delta (anti-join on canonical hash) →
   *   unseen/update split on sync keys →
@@ -26,7 +28,10 @@ import graft.storage.{PipeStorage, StrayScan}
   * the reference's heuristic (core/Pipe/_sync.py:860-896) — so the diff join
   * compares the batch against a window, never the whole table; that is what
   * keeps a 100 TB target syncable (the window is broadcast-able in the
-  * common case).
+  * common case). The schema comes from `InstanceStore.schemaDdl`, so a
+  * backend whose `read` fetches the table (HTTP, KV) moves O(batch +
+  * window) rows per sync; the whole target is read only by a type-
+  * promotion rewrite and by the backtrack of a batch without an envelope.
   */
 /** Counts are derived from the BACKTRACK-WINDOW tag (the reference's
   * filter_existing split): in upsert mode a key whose existing row lives
@@ -323,7 +328,7 @@ final class SyncEngine(spark: SparkSession, root: String,
       return SyncResult(inserted = n, updated = 0)
     }
     val pre       = store.rowCount
-    val tgtSchema = store.read.schema
+    val tgtSchema = targetSchema(store)
     val aligned =
       if (spec.static) SchemaEvolution.conform(batch, tgtSchema)
       else {
@@ -378,23 +383,25 @@ final class SyncEngine(spark: SparkSession, root: String,
     //    a TYPE PROMOTION (e.g. int val + float batch -> numeric) rewrites the
     //    table, because parquet cannot merge conflicting physical types. At
     //    100 TB an added column is a metadata event, not a rewrite.
-    val target = store.read
-    val (targetAligned, batchAligned) =
-      if (spec.static) (target, SchemaEvolution.conform(batch, target.schema))
+    //    Evolution needs only the target's SCHEMA; the target's rows are
+    //    read only by a promotion rewrite and by the backtrack of a batch
+    //    without an envelope (see backtrackSlice) — on the HTTP and KV
+    //    backends `read` fetches the whole table.
+    val tgtSchema = targetSchema(store)
+    val alignedSchema =
+      if (spec.static) tgtSchema
       else {
-        val u = SchemaEvolution.unifiedSchema(target.schema, batch.schema, spec.mixedNumerics)
-        val promoted = target.schema.fields.exists(f =>
+        val u = SchemaEvolution.unifiedSchema(tgtSchema, batch.schema, spec.mixedNumerics)
+        val promoted = tgtSchema.fields.exists(f =>
           u.find(_.name == f.name).exists(_.dataType != f.dataType))
         if (promoted) {
-          store.overwrite(SchemaEvolution.conform(target, u)) // tmp+swap write
+          store.overwrite(SchemaEvolution.conform(store.read, u)) // tmp+swap write
           persistDtypes(spec, u, inferredSpecial)
-          (store.read, SchemaEvolution.conform(batch, u))     // re-read post-swap
-        } else {
-          if (u.length != target.schema.length || inferredSpecial.nonEmpty)
-            persistDtypes(spec, u, inferredSpecial)
-          (SchemaEvolution.conform(target, u), SchemaEvolution.conform(batch, u))
-        }
+        } else if (u.length != tgtSchema.length || inferredSpecial.nonEmpty)
+          persistDtypes(spec, u, inferredSpecial)
+        u
       }
+    val batchAligned = SchemaEvolution.conform(batch, alignedSchema)
 
     val keys = syncKeys(spec, batchAligned)
     // the batch's axis envelope, computed ONCE: bounds both the backtrack
@@ -407,8 +414,9 @@ final class SyncEngine(spark: SparkSession, root: String,
     //    applies arbitrary rows, so the dt-move guard must scan the full
     //    key columns (StrayScan.Full — documented cost of the guarantee).
     if (spec.upsert) {
-      val patch = tagAgainstTarget(spec, store, targetAligned,
-        dedupeBatch(spec, batchAligned), keys, envelope, diff = false).cache()
+      val patch = tagAgainstTarget(spec, store,
+        backtrackSlice(store, alignedSchema, envelope),
+        dedupeBatch(spec, batchAligned), keys, diff = false).cache()
       try {
         val (nIns, nUpd, chunks, _) = countsAndChunks(store, patch, allRows = true)
         store.upsert(patch.drop(UpdFlag), keys, chunks, StrayScan.Full)
@@ -425,8 +433,9 @@ final class SyncEngine(spark: SparkSession, root: String,
       //    backtrack window, so their old chunks are provably within it —
       //    the stray guard prunes to that window instead of scanning the
       //    table.
-      val tagged = tagAgainstTarget(spec, store, targetAligned,
-        dedupeBatch(spec, batchAligned), keys, envelope, diff = true).cache()
+      val tagged = tagAgainstTarget(spec, store,
+        backtrackSlice(store, alignedSchema, envelope),
+        dedupeBatch(spec, batchAligned), keys, diff = true).cache()
       try {
         val (nIns, nUpd, chunks, located) = countsAndChunks(store, tagged, allRows = false)
         val stray = envelope.map { case (lo, hi) => StrayScan.Bounded(lo, hi): StrayScan }
@@ -482,11 +491,9 @@ final class SyncEngine(spark: SparkSession, root: String,
 
   /** Tag batch rows as update (key exists in the backtrack window) or insert.
     * `diff = true` also drops full-row-identical rows first (the delta). */
-  private def tagAgainstTarget(spec: PipeSpec, store: graft.storage.InstanceStore, target: DataFrame,
-                               batch: DataFrame, keys: Seq[String],
-                               envelope: Option[(Any, Any)],
+  private def tagAgainstTarget(spec: PipeSpec, store: graft.storage.InstanceStore,
+                               backtrack: DataFrame, batch: DataFrame, keys: Seq[String],
                                diff: Boolean): DataFrame = {
-    val backtrack = backtrackSlice(spec, store, target, envelope)
     // hot-key pipes opt into a salted diff join (extras.skew_salt = N):
     // the deterministic form of skew mitigation for the hash-join path
     // AQE's sort-merge-only skew handling can't reach
@@ -613,20 +620,25 @@ final class SyncEngine(spark: SparkSession, root: String,
       }
     }
 
-  /** Target slice the diff compares against: rows inside the batch's dt
-    * envelope. Without an envelope (no dt axis, or all-null) the whole
-    * target is the backtrack (small-dimension pipes). */
-  private def backtrackSlice(spec: PipeSpec, store: graft.storage.InstanceStore, target: DataFrame,
+  /** Target slice the diff compares against, conformed to `schema`: rows
+    * inside the batch's dt envelope. Without an envelope (no dt axis, or
+    * all-null) the whole target is the backtrack (small-dimension pipes) —
+    * the only diff case that reads the whole target. */
+  private def backtrackSlice(store: graft.storage.InstanceStore, schema: StructType,
                              envelope: Option[(Any, Any)]): DataFrame =
-    envelope match {
-      case Some((lo, hi)) =>
-        // the slice goes back to STORAGE with explicit bounds, so the
-        // chunk-label range prunes partition directories — at 100 TB the
-        // diff reads only the chunks the envelope touches
-        SchemaEvolution.conform(
-          store.readRange(Some(lo), Some(hi), endInclusive = true), target.schema)
-      case None => target
-    }
+    SchemaEvolution.conform(envelope match {
+      // the slice goes back to STORAGE with explicit bounds, so the
+      // chunk-label range prunes partition directories — at 100 TB the
+      // diff reads only the chunks the envelope touches
+      case Some((lo, hi)) => store.readRange(Some(lo), Some(hi), endInclusive = true)
+      case None           => store.read
+    }, schema)
+
+  /** The stored schema through [[graft.storage.InstanceStore.schemaDdl]]:
+    * no rows move, whatever the backend's `read` costs. */
+  private def targetSchema(store: graft.storage.InstanceStore): StructType =
+    StructType.fromDDL(store.schemaDdl.getOrElse(throw new IllegalArgumentException(
+      s"pipe ${store.spec.targetName} does not exist")))
 
   /** Begin bound for the next fetch: newest sync time minus the backtrack
     * window (reference core/Pipe/_fetch.py:144-181). */

@@ -96,4 +96,14 @@ class StreamingRestartSpec extends SparkSpec {
     assert(out.select("id").distinct().count() === 400L)
     assert(out.agg(sum(col("id"))).head().getLong(0) === (0L until 400L).sum)
   }
+
+  test("q_streaming_restart_e2e's quarter staging names an empty quarter") {
+    val tmp = tmpDir()
+    spark.range(0, 8).where(col("id") % 4 =!= 3)
+      .withColumn("__q", col("id") % 4)
+      .write.partitionBy("__q").mode("overwrite").parquet(tmp)
+    assert(SparkEntry.stagedQuarterFile(tmp, 1).getName.endsWith(".parquet"))
+    val e = intercept[IllegalStateException](SparkEntry.stagedQuarterFile(tmp, 3))
+    assert(e.getMessage.contains("quarter 3"), e.getMessage)
+  }
 }

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{ColumnRoles, PipeKeys, PipeSpec}
 import graft.sync.SyncEngine
 
-/** Pins the Spark job count of a steady-state parquet diff sync — a batch
-  * with both updates and inserts against an existing table. Every job the
+/** Pins the Spark job count of a steady-state diff sync — a batch with
+  * both updates and inserts against an existing table — on the parquet
+  * store and on the HTTP instance (`ApiStore`, client side). Every job the
   * sync starts counts: AQE query stages, broadcasts, the counts aggregate
   * and the storage write. Jobs are attributed through a thread-local
   * property, which Spark carries into its broadcast and query-stage
@@ -62,18 +63,34 @@ class SyncJobBudgetSpec extends SparkSpec {
     }
   }
 
-  test("a parquet diff sync with updates and inserts runs at most 12 jobs") {
-    val eng = new SyncEngine(spark, tmpDir())
-    val spec = PipeSpec(PipeKeys("budget", "events"),
+  /** The jobs of the third sync of a pipe: a create, a warming diff sync
+    * (it fills what steady state keeps warm, the schema caches), then the
+    * counted diff sync with 2000 inserts and 100 updates. */
+  private def steadyStateJobs(eng: SyncEngine, name: String): Seq[String] = {
+    val spec = PipeSpec(PipeKeys("budget", name),
       columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
     eng.sync(spec, events(0, 2000, _ => 0))
-    // a first diff sync warms what steady state keeps warm (the schema cache)
     eng.sync(spec, events(1800, 4000, n => if (n < 2000 && n % 2 == 0) 1 else 0))
     val (r, jobs) = jobsOf(
       eng.sync(spec, events(3800, 6000, n => if (n < 4000 && n % 2 == 0) 1 else 0)))
     assert((r.inserted, r.updated) == ((2000L, 100L)))
-    val perExecution = jobs.groupBy(identity).map { case (d, js) => s"${js.size} × $d" }
-    assert(jobs.size <= 12,
-      s"diff sync ran ${jobs.size} jobs: ${perExecution.mkString("; ")}")
+    jobs
+  }
+
+  private def describe(jobs: Seq[String]): String =
+    jobs.groupBy(identity).map { case (d, js) => s"${js.size} × $d" }.mkString("; ")
+
+  test("a parquet diff sync with updates and inserts runs at most 12 jobs") {
+    val jobs = steadyStateJobs(new SyncEngine(spark, tmpDir()), "events")
+    assert(jobs.size <= 12, s"diff sync ran ${jobs.size} jobs: ${describe(jobs)}")
+  }
+
+  /** Client-side jobs only: the server runs its store calls on its own
+    * request threads, which do not carry the sync's job property. */
+  test("an ApiStore diff sync with updates and inserts runs at most 13 client jobs") {
+    val eng = new SyncEngine(spark, tmpDir(),
+      storeFactory = graft.storage.ApiStore.factory(TestPipeServer.server.url))
+    val jobs = steadyStateJobs(eng, "api_events")
+    assert(jobs.size <= 13, s"diff sync ran ${jobs.size} client jobs: ${describe(jobs)}")
   }
 }

@@ -1,0 +1,129 @@
+package graft
+
+import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
+import java.time.LocalDateTime
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+
+import graft.catalog.{ColumnRoles, PipeKeys, PipeSpec}
+import graft.storage.{ApiStore, InstanceStore, PipeStorage, ValkeyStore}
+import graft.sync.{SyncEngine, SyncResult}
+
+/** A diff sync needs the target's schema, not the target: on the HTTP and
+  * Valkey backends `read` fetches the whole table, so a steady-state diff
+  * sync of a pipe with a dt axis must not call it. The engine's store
+  * factory is wrapped in a dynamic proxy that counts every trait call the
+  * engine makes (calls a store makes on itself are not seen). */
+class SyncTargetReadSpec extends SparkSpec {
+  import spark.implicits._
+
+  private type Factory = (SparkSession, String, PipeSpec) => InstanceStore
+
+  /** `base` with every store it makes wrapped in a counting proxy. */
+  private def counting(base: Factory, calls: ConcurrentHashMap[String, AtomicInteger]): Factory =
+    (s, r, sp) => {
+      val inner = base(s, r, sp)
+      val handler = new InvocationHandler {
+        def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef = {
+          calls.computeIfAbsent(m.getName, _ => new AtomicInteger).incrementAndGet()
+          try m.invoke(inner, (if (args == null) Array.empty[AnyRef] else args): _*)
+          catch { case e: InvocationTargetException => throw e.getCause }
+        }
+      }
+      Proxy.newProxyInstance(classOf[InstanceStore].getClassLoader,
+        Array(classOf[InstanceStore]), handler).asInstanceOf[InstanceStore]
+    }
+
+  private def parquet: Factory = (s, r, sp) => new PipeStorage(s, r, sp)
+  private def api: Factory = ApiStore.factory(TestPipeServer.server.url)
+  private def valkey: Factory =
+    ValkeyStore.factory(TestMiniValkey.server.host, TestMiniValkey.server.port)
+
+  /** `event_id` n at minute n of March 2024; `version(n)` = 1 changes the
+    * value. */
+  private def events(lo: Int, hi: Int, version: Int => Int): DataFrame = {
+    val t0 = LocalDateTime.of(2024, 3, 1, 0, 0)
+    (lo until hi).map { n =>
+      (n.toLong, java.sql.Timestamp.valueOf(t0.plusMinutes(n.toLong)),
+        n % 7, n.toDouble + 1000.0 * version(n))
+    }.toDF("event_id", "ts", "user_id", "value")
+      .withColumn("ts", col("ts").cast("timestamp_ntz"))
+  }
+
+  /** Create, then two diff syncs each re-sending the previous batch's last
+    * 10% with every other re-sent row changed. */
+  private val Batches: Seq[() => DataFrame] = Seq(
+    () => events(0, 400, _ => 0),
+    () => events(360, 800, n => if (n < 400 && n % 2 == 0) 1 else 0),
+    () => events(760, 1200, n => if (n < 800 && n % 2 == 0) 1 else 0))
+
+  private def rows(df: DataFrame): Seq[Row] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSeq.sortBy(_.toString)
+
+  /** Sync `batches` through a fresh pipe; returns each sync's counts, the
+    * final table and the calls the engine made during the diff syncs. */
+  private def run(base: Factory, spec: PipeSpec, batches: Seq[() => DataFrame])
+      : (Seq[(Long, Long)], Seq[Row], Map[String, Int]) = {
+    val calls = new ConcurrentHashMap[String, AtomicInteger]()
+    val eng = new SyncEngine(spark, tmpDir(), storeFactory = counting(base, calls))
+    val first = eng.sync(spec, batches.head())
+    calls.clear()
+    val rest = batches.tail.map(b => eng.sync(spec, b()))
+    val diffCalls = calls.asScala.map { case (k, v) => k -> v.get }.toMap
+    val counts = (first +: rest).map((r: SyncResult) => (r.inserted, r.updated))
+    (counts, rows(eng.getData(spec)), diffCalls)
+  }
+
+  private def spec(name: String, roles: Map[String, String]): PipeSpec =
+    PipeSpec(PipeKeys("target_read", name), columns = ColumnRoles(roles))
+
+  private val withAxis = Map("datetime" -> "ts", "primary" -> "event_id")
+
+  for ((backend, factory) <- Seq("ApiStore" -> (() => api), "ValkeyStore" -> (() => valkey)))
+    test(s"a steady-state diff sync over $backend reads the schema, never the whole table") {
+      val sp = spec(s"steady_${backend.toLowerCase}", withAxis)
+      val (counts, table, calls) = run(factory(), sp, Batches)
+      val (pCounts, pTable, _) = run(parquet, sp, Batches)
+      assert(calls.getOrElse("read", 0) == 0, s"engine store calls: $calls")
+      assert(calls.getOrElse("schemaDdl", 0) >= 2, s"engine store calls: $calls")
+      assert(calls.getOrElse("readRange", 0) >= 2, s"engine store calls: $calls")
+      assert(counts == Seq((400L, 0L), (400L, 20L), (400L, 20L)))
+      assert(counts == pCounts)
+      assert(table.size == 1200)
+      assert(table == pTable)
+    }
+
+  test("a type-promoting batch over ApiStore rewrites the table and syncs like parquet") {
+    val sp = spec("promote", withAxis)
+    val promoting: Seq[() => DataFrame] = Seq(
+      () => events(0, 100, _ => 0), // user_id: int
+      () => events(90, 200, n => if (n < 100) 1 else 0)
+        .withColumn("user_id", col("user_id").cast("double") + 0.5))
+    val (counts, table, calls) = run(api, sp, promoting)
+    val (pCounts, pTable, _) = run(parquet, sp, promoting)
+    assert(counts == Seq((100L, 0L), (100L, 10L)))
+    assert(counts == pCounts)
+    assert(table == pTable)
+    assert(table.head.schema("user_id").dataType != org.apache.spark.sql.types.IntegerType)
+    assert(table.head.schema("user_id").dataType == pTable.head.schema("user_id").dataType)
+    // the promotion rewrite is a read case: the old rows are re-typed
+    assert(calls.getOrElse("read", 0) >= 1 && calls.getOrElse("overwrite", 0) == 1,
+      s"engine store calls: $calls")
+  }
+
+  test("a pipe without a dt axis diffs against the whole table over ApiStore") {
+    val sp = spec("no_axis", Map("primary" -> "event_id"))
+    val noAxis = Batches.map(b => () => b().drop("ts"))
+    val (counts, table, calls) = run(api, sp, noAxis)
+    val (pCounts, pTable, _) = run(parquet, sp, noAxis)
+    assert(counts == Seq((400L, 0L), (400L, 20L), (400L, 20L)))
+    assert(counts == pCounts)
+    assert(table == pTable)
+    assert(calls.getOrElse("read", 0) >= 2, s"engine store calls: $calls")
+  }
+}
