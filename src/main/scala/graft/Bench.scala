@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.Session.{fixed, json}
 object Bench {
 
   /** Pure selection of entries deserving ONE targeted extra measurement
@@ -50,96 +51,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // pin the JVM default zone too: embedded-JDBC (Derby) timestamp
-    // round-trips render wall-clock in the JVM zone, not the session zone
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Message-matching filter for the two known-benign WARN floods
-    // (localCheckpoint lineage truncation, allowlisted unpartitioned
-    // windows) — see LogHygiene for why a package-wide ERROR was wrong.
-    LogHygiene.install()
-    // JVM/codegen/parquet-reader warmup so the first measured query doesn't
-    // absorb ~5-15s of class loading (queries iterate in arbitrary map order)
-    spark.range(0, 100000).selectExpr("sum(id)").collect()
-    spark.read.parquet(Tables.path(sfDir, "region")).count()
-    // Representative star-join warmup, DISCARDED (r6 verdict: deterministic
-    // name ordering put q1/q3/q5 first, and they absorbed the one-time
-    // whole-stage-codegen + vectorized-reader + shuffle/broadcast machinery
-    // JIT cost — a 2-4x inflation vs their steady-state times). This primes
-    // exactly those code paths against the same tables before anything is
-    // timed: big-table parquet scan with a pushed filter, a join, hash
-    // aggregate, sort, limit.
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(Tables.path(sfDir, "lineitem"))
-        .where(col("l_shipdate") > lit("1995-01-01"))
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      val or = spark.read.parquet(Tables.path(sfDir, "orders"))
-        .select(col("o_orderkey"), col("o_orderdate"))
-      li.join(or, li("l_orderkey") === or("o_orderkey"))
-        .groupBy(col("o_orderdate"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-        .orderBy(col("rev").desc).limit(5).count()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // Sync-machinery warmup, DISCARDED (r6 verdict item 1, same rationale as
-    // the star join): the first sync-family query in name order
-    // (q_api_instance_e2e) otherwise absorbs the one-time JIT of the whole
-    // engine+storage+HTTP stack — measured 23s cold vs 6s steady-state for
-    // an identical run. A 60-row sync through a live PipeServer primes
-    // SyncEngine diff/upsert, parquet chunk writes, ND-JSON both directions,
-    // the staged-upload foreachPartition path, and the JDK HttpClient/server.
-    locally {
-      import org.apache.spark.sql.functions._
-      import graft.catalog.{PipeSpec, PipeKeys, ColumnRoles}
-      val root = java.nio.file.Files.createTempDirectory("graft_bench_warm").toString
-      val srvDir = java.nio.file.Files.createTempDirectory("graft_bench_warm_srv").toString
-      val srv = new graft.server.PipeServer(spark, srvDir)
-      try {
-        val eng = new graft.sync.SyncEngine(spark, root,
-          storeFactory = graft.storage.ApiStore.factory(srv.url))
-        val spec = PipeSpec(PipeKeys("warm", "warm"),
-          columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
-        val ev = Tables.events(spark, sfDir).where(col("event_id") < 600)
-        eng.sync(spec, ev.where(col("event_id") < 400))
-        eng.sync(spec, ev.where(col("event_id") >= 200)
-          .withColumn("value", col("value") + 1))
-        eng.getData(spec).count()
-      } finally {
-        srv.stop()
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    }
     // (name -> (seconds, errorOrNull)); a failed query must surface, never
     // bench as a fast success. count() is the measured action: it evaluates
     // every filter/join/aggregate but lets ColumnPruning drop a final
     // unreferenced projection — acceptable here because the queries end in
     // aggregates/sorts/limits, and switching sinks would break
     // round-over-round comparability of BENCH_r{N}.json.
-    // Local-iteration filter, mirroring Verify: SPARK_GRAFT_ONLY=q_a,q_b
-    // benches a subset. The driver sets no env, so its run measures all.
-    // filter out blanks so `SPARK_GRAFT_ONLY= ...` (empty var) means "all"
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else {
-        val unknown = only -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty) {
-          System.err.println(s"[bench] ERROR: unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(", ")}")
-          spark.stop(); sys.exit(2)
-        }
-        SparkEntry.queries.view.filterKeys(only).toMap
-      }
+    // Local iteration: SPARK_GRAFT_ONLY=q_a,q_b benches a subset; unset,
+    // the whole suite runs.
+    val subset = Session.only(SparkEntry.queries)
+    val selected = subset.getOrElse(SparkEntry.queries)
+    val spark = Session.local()
+    Session.warm(spark, sfDir)
     // deterministic name order: map-order iteration made round-over-round
     // per-query comparisons noisy (whichever query ran after a heavy one
     // inherited its GC shadow; the slot changed every build)
@@ -168,10 +91,7 @@ object Bench {
       // runs late in the (arbitrary) map order — observed as a 5s query
       // benching 27s. Clearing between queries measures each against a
       // clean executor, like the driver's per-query runs.
-      spark.sharedState.cacheManager.clearCache()
-      // localCheckpoint blocks (iterative clustering, eager pair lists) are
-      // RDD-level storage the cacheManager does not track — release them too
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Session.sweep(spark)
       label -> (elapsed, err)
       }
     }
@@ -196,6 +116,10 @@ object Bench {
           2
       }
     }.getOrElse(2)
+    // best-effort recursive delete of the canaries' tmp dirs
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
     // CALIBRATION CANARY (r9 verdict item 3): a fixed synthetic workload that
     // touches only Spark built-ins + a tmp-dir parquet round trip — no repo
     // code — so its time measures the BOX (CPU + shuffle machinery + tmp-dir
@@ -221,11 +145,7 @@ object Bench {
         org.apache.spark.sql.functions.sum("v")).collect()
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sharedState.cacheManager.clearCache()
-      // best-effort tmp cleanup (canary writes ~30 MB per pass)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
+      rm(dir.toFile) // the canary writes ~30 MB per pass
       sec
     }
     // IO-COHORT CANARY (r11 verdict item 3): the CPU canary provably cannot
@@ -285,9 +205,6 @@ object Bench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sharedState.cacheManager.clearCache()
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
       rm(dir.toFile)
       sec
     }
@@ -311,10 +228,9 @@ object Bench {
     // suite.
     val priorBaseline: (Map[String, Double], Double, Double) = {
       val p = java.nio.file.Paths.get("BENCH_LOCAL.json")
-      if (only.nonEmpty || !java.nio.file.Files.exists(p)) (Map.empty, 0.0, 0.0)
+      if (subset.isDefined || !java.nio.file.Files.exists(p)) (Map.empty, 0.0, 0.0)
       else try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readAllBytes(p))
+        val root = Session.mapper.readTree(java.nio.file.Files.readAllBytes(p))
         val qs = root.path("queries")
         val it = qs.fieldNames()
         val b = Map.newBuilder[String, Double]
@@ -324,7 +240,7 @@ object Bench {
       } catch { case _: Throwable => (Map.empty, 0.0, 0.0) }
     }
     val retried: Seq[Seq[(String, (Double, String))]] =
-      if (only.nonEmpty || reps < 2) Seq.empty
+      if (subset.isDefined || reps < 2) Seq.empty
       else {
         val names = Bench.selectRetryNames(queryPasses,
           priorBaseline._1, priorBaseline._2, priorBaseline._3,
@@ -366,7 +282,7 @@ object Bench {
     // (observed 2.25-3.40 s across same-code runs) so only a genuinely
     // broken box or canary trips them.
     val guardFailures: Seq[String] =
-      if (only.nonEmpty) Seq.empty
+      if (subset.isDefined) Seq.empty
       else {
         // Normalize the bar by the canary when the box runs slower than the
         // reference environment (r10 driver canary = 2.27 s, observed
@@ -395,19 +311,10 @@ object Bench {
           else None
         (apiBar ++ canaryBar).toSeq
       }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     // 2-decimal timings + headline total LAST: the harness captures a bounded
     // tail of stdout, so the line stays short and the summary fields sit at
     // the END to survive truncation of a long per-query map. The full
     // 3-decimal report also lands in BENCH_LOCAL.json for exact reading.
-    // Locale.ROOT: a comma-decimal default locale (de_DE etc.) would emit
-    // invalid JSON ("q1":1,234) and zero the round's bench results
-    def fmt(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
     // The harness records only the LAST 2000 chars of stdout (r4's line was
     // 2.9k → BENCH_r04.parsed = null). Stdout therefore shows the slowest
     // `cap` queries (the informative ones) plus an omitted-count/-sum so the
@@ -430,7 +337,7 @@ object Bench {
             field("generated_at_epoch_ms")) match {
           case (Some(t), Some(o), Some(f), Some(ts)) =>
             val ageH = (System.currentTimeMillis() - ts.toLong) / 3.6e6
-            s"""{"total":$t,"ok":$o,"failed":$f,"report_age_hours":${fmt(ageH, 1)}}"""
+            s"""{"total":$t,"ok":$o,"failed":$f,"report_age_hours":${fixed(ageH, 1)}}"""
           case _ => "null"
         }
       }
@@ -443,27 +350,27 @@ object Bench {
       val bySlowest = results.toSeq.sortBy { case (_, (v, _)) => -v }
       val (shown, omitted) =
         if (cap > 0) bySlowest.splitAt(cap) else (bySlowest, Seq.empty)
-      val qs = shown.map { case (k, (v, _)) => jstr(k) + ":" + fmt(v, dec) }
+      val qs = shown.map { case (k, (v, _)) => json(k) + ":" + fixed(v, dec) }
         .mkString("{", ",", "}")
-      val errs = results.collect { case (k, (_, e)) if e != null => jstr(k) + ":" + jstr(e) }
+      val errs = results.collect { case (k, (_, e)) if e != null => json(k) + ":" + json(e) }
         .mkString("{", ",", "}")
       val nFailed = results.count(_._2._2 != null)
       val total = results.map(_._2._1).sum
       val omitSum = omitted.map(_._2._1).sum
-      val guards = guardFailures.map(jstr).mkString("[", ",", "]")
+      val guards = guardFailures.map(json).mkString("[", ",", "]")
       val retriedField =
         if (includeRetried)
           retriedTimes.map { case (k, ts) =>
-            jstr(k) + ":" + ts.map(fmt(_, dec)).mkString("[", ",", "]")
+            json(k) + ":" + ts.map(fixed(_, dec)).mkString("[", ",", "]")
           }.mkString("\"retried\":{", ",", "},")
         else ""
-      s"""{$retriedField"queries":$qs,"errors":$errs,"failed":$nFailed,"guard_failures":$guards,"omitted_fast":${omitted.size},"omitted_sec":${fmt(omitSum, dec)},"sf":${jstr(sfDir)},"protocol":${jstr(protocol)},"n_retried":${retriedTimes.size},"calibration_sec":${fmt(calibrationSec, dec)},"io_calibration_sec":${fmt(ioCalibrationSec, dec)},"n_queries":${results.size},"verify":$verifyDigest,"metric":"total","value":${fmt(total, dec)},"unit":"sec"}"""
+      s"""{$retriedField"queries":$qs,"errors":$errs,"failed":$nFailed,"guard_failures":$guards,"omitted_fast":${omitted.size},"omitted_sec":${fixed(omitSum, dec)},"sf":${json(sfDir)},"protocol":${json(protocol)},"n_retried":${retriedTimes.size},"calibration_sec":${fixed(calibrationSec, dec)},"io_calibration_sec":${fixed(ioCalibrationSec, dec)},"n_queries":${results.size},"verify":$verifyDigest,"metric":"total","value":${fixed(total, dec)},"unit":"sec"}"""
     }
     // subset runs (SPARK_GRAFT_ONLY) land in /tmp — they must never clobber
     // the committed full-suite baseline that round-over-round regression
     // grading compares against (r8 advice: a 1-query profiling run did)
     val outPath =
-      if (only.isEmpty) "BENCH_LOCAL.json" else "/tmp/BENCH_SUBSET.json"
+      if (subset.isEmpty) "BENCH_LOCAL.json" else "/tmp/BENCH_SUBSET.json"
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
       (line(3, 0, includeRetried = true) + "\n").getBytes("UTF-8"))

@@ -22,45 +22,53 @@ package graft
   * still reaches the tail.
   */
 object LogHygiene {
-  def install(): Unit = {
+  /** True for the benign messages the filter drops. */
+  private[graft] def drop(m: String): Boolean =
+    (m.contains("locally checkpointed") &&
+      m.contains("lineage has been truncated")) ||
+    m.contains("No Partition Defined for Window operation") ||
+    // Structural streaming notices (r14 verdict item 6): AQE is NEVER
+    // supported in stateful streaming — Spark emits one WARN per
+    // streaming query construction (MicroBatchExecution /
+    // ResolveWriteToStream) regardless of configuration, so the
+    // category carries zero signal. Matching the exact phrases keeps
+    // every other AQE warning visible.
+    m.contains("Disabling AQE since AQE is not supported in stateful") ||
+    m.contains("spark.sql.adaptive.enabled is not supported in streaming") ||
+    // DAGScheduler's stop-side race: a finished streaming query's
+    // cancelJobGroup fires after its jobs already completed — by
+    // construction there is nothing to cancel, and the message carries
+    // no signal a hung cancellation wouldn't surface elsewhere (the
+    // stream's own awaitTermination would fail first).
+    m.contains("Failed to cancel job group") ||
+    // The ANN family ships model artifacts (PQ codebooks, rotated
+    // centroids, per-query ADC tables) as PLAN LITERALS by design —
+    // the bounded-configuration alternative to per-row joins — so
+    // task binaries legitimately cross the 1000 KiB notice threshold
+    // (≤ ~6 MiB, sized by m·ks·dim configuration, never by data). An
+    // unbounded-literal regression would surface in PLANS.md (the
+    // literal prints in the plan), which the audit reads every round.
+    m.contains("Broadcasting large task binary") ||
+    // Concurrent materialization of frames sharing a cached upstream
+    // (the r16 §2.6 overlapped-writes groups): two driver threads can
+    // race to compute the same cached partition; BlockManager keeps the
+    // first copy and logs this per block. Benign for cached RDD blocks
+    // only — the winning block is what both readers consume — so the
+    // match is scoped to `rdd_` block ids: a re-add of a broadcast,
+    // shuffle or stream block still reaches the log.
+    (m.startsWith("Block rdd_") &&
+      m.endsWith("already exists on this machine; not re-adding it"))
+
+  private val installed = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Attach the filter to the root and every named logger config; later
+    * calls in the same JVM are no-ops. */
+  def install(): Unit = if (installed.compareAndSet(false, true)) {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.filter.AbstractFilter
 
     val noisy = new AbstractFilter(Filter.Result.DENY, Filter.Result.NEUTRAL) {
-      private def drop(m: String): Boolean =
-        (m.contains("locally checkpointed") &&
-          m.contains("lineage has been truncated")) ||
-        m.contains("No Partition Defined for Window operation") ||
-        // Structural streaming notices (r14 verdict item 6): AQE is NEVER
-        // supported in stateful streaming — Spark emits one WARN per
-        // streaming query construction (MicroBatchExecution /
-        // ResolveWriteToStream) regardless of configuration, so the
-        // category carries zero signal. Matching the exact phrases keeps
-        // every other AQE warning visible.
-        m.contains("Disabling AQE since AQE is not supported in stateful") ||
-        m.contains("spark.sql.adaptive.enabled is not supported in streaming") ||
-        // DAGScheduler's stop-side race: a finished streaming query's
-        // cancelJobGroup fires after its jobs already completed — by
-        // construction there is nothing to cancel, and the message carries
-        // no signal a hung cancellation wouldn't surface elsewhere (the
-        // stream's own awaitTermination would fail first).
-        m.contains("Failed to cancel job group") ||
-        // The ANN family ships model artifacts (PQ codebooks, rotated
-        // centroids, per-query ADC tables) as PLAN LITERALS by design —
-        // the bounded-configuration alternative to per-row joins — so
-        // task binaries legitimately cross the 1000 KiB notice threshold
-        // (≤ ~6 MiB, sized by m·ks·dim configuration, never by data). An
-        // unbounded-literal regression would surface in PLANS.md (the
-        // literal prints in the plan), which the audit reads every round.
-        m.contains("Broadcasting large task binary") ||
-        // Concurrent materialization of frames sharing a cached upstream
-        // (the r16 §2.6 overlapped-writes groups): two driver threads can
-        // race to compute the same cached partition; BlockManager keeps
-        // the first copy and logs this per block. Benign by construction —
-        // the winning block is what both readers consume — and the message
-        // carries no signal a real storage failure wouldn't raise louder.
-        m.contains("already exists on this machine; not re-adding it")
       override def filter(e: LogEvent): Filter.Result =
         if (e != null && e.getMessage != null &&
             drop(e.getMessage.getFormattedMessage)) onMatch else onMismatch

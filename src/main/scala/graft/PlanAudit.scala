@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
-
 /** Dump `explain("formatted")` for a set of flagship queries into PLANS.md —
   * the plan-shape evidence behind SCALE.md's claims (pushdown reaching the
   * scan, pruned ReadSchema, broadcast dims, no cross joins, shuffle-free
-  * index builds). Run: `sbt "runMain graft.PlanAudit <sfDir>"`.
+  * index builds). Run: `sbt "runMain graft.PlanAudit <sfDir>"`. Every
+  * plan comes from [[PlanDump.explain]]; the last three entries are lazy
+  * stages whose public frames end in an eager checkpoint.
   */
 object PlanAudit {
 
@@ -171,22 +170,33 @@ object PlanAudit {
        "BroadcastExchange, scores are map-side-combined integer hash " +
        "aggregates keyed on doc, and the confusion rollup is one final " +
        "single-row aggregate — the corpus crosses exactly one exchange " +
-       "as (doc, y, partial-score) triples."))
+       "as (doc, y, partial-score) triples."),
+    "q_minhash_near_dups_fast_candidates" ->
+      ("Production near-dup candidates: hot buckets drop via a " +
+       "BroadcastHashJoin LeftAnti (no sort, no extra wide shuffle), the " +
+       "band self-join is an equi-join on (band, bandHash), and the " +
+       "estimate prefilter reads only the cached k-long signatures."),
+    "q_domain_kl_lazy" ->
+      ("Per-source KL: ONE corpus scan — the (source, type) aggregate is " +
+       "persisted and all three consumers (join probe, type totals, " +
+       "source totals) read the InMemoryTableScan; totals ride as " +
+       "BroadcastExchange sides."),
+    "q_bigram_logprob_lazy" ->
+      ("Interpolated-bigram LM: ONE corpus scan — the token arrays are " +
+       "persisted and BOTH the unigram and bigram explodes read the " +
+       "InMemoryTableScan; model tables are type-level equi-joins, " +
+       "document text never shuffles."))
+
+  /** Section titles of the [[PlanDump.stages]] entries above. */
+  private val titles = Map(
+    "q_minhash_near_dups_fast_candidates" -> "q_minhash_near_dups_fast (candidate stage)",
+    "q_domain_kl_lazy" -> "q_domain_kl (lazy stage)",
+    "q_bigram_logprob_lazy" -> "q_bigram_logprob (lazy stage)")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out   = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // pin the JVM default zone too: embedded-JDBC (Derby) timestamp
-    // round-trips render wall-clock in the JVM zone, not the session zone
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val sb = new StringBuilder
     sb ++= "# PLANS — flagship physical plans (`explain formatted`)\n\n"
     sb ++= s"Generated by `graft.PlanAudit` against `$sfDir`. Each plan is the\n"
@@ -195,57 +205,8 @@ object PlanAudit {
     sb ++= "shapes are also asserted by unit tests (plan-audit specs), so they\n"
     sb ++= "cannot silently regress.\n"
     audited.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      sb ++= s"\n## $name\n\n$why\n\n```\n${plan.trim}\n```\n"
-    }
-    // the fast path eagerly checkpoints its pair list (lineage truncates),
-    // so its candidate stage is dumped directly — this is the 100 TB
-    // near-dup plan: r=4 banding, hot-bucket broadcast anti-join cap,
-    // signature-estimate prefilter before any shingle set shuffles
-    locally {
-      val (sig, cands) = graft.ops.ApproxDedup.minhashFastCandidates(
-        Tables.documents(spark, sfDir), "doc_id", "text", threshold = 0.5,
-        shingleSize = 3, k = 24, bands = 6, estSlack = 0.25, maxBucket = 200,
-        md5Base = true)
-      try {
-        val plan = cands.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        sb ++= "\n## q_minhash_near_dups_fast (candidate stage)\n\n" +
-          "Production near-dup candidates: hot buckets drop via a " +
-          "BroadcastHashJoin LeftAnti (no sort, no extra wide shuffle), the " +
-          "band self-join is an equi-join on (band, bandHash), and the " +
-          "estimate prefilter reads only the cached k-long signatures.\n\n" +
-          s"```\n${plan.trim}\n```\n"
-      } finally { sig.unpersist(); () }
-    }
-    // checkpointing entries hide their auditable shape behind a LogicalRDD —
-    // dump the LAZY pipelines directly (same treatment as the minhash
-    // candidate stage above)
-    locally {
-      val (kl, st) = graft.ops.Corpus.domainDivergenceLazy(
-        Tables.documents(spark, sfDir), "source", "text")
-      try {
-        val plan = kl.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        sb ++= "\n## q_domain_kl (lazy stage)\n\n" +
-          "Per-source KL: ONE corpus scan — the (source, type) aggregate is " +
-          "persisted and all three consumers (join probe, type totals, " +
-          "source totals) read the InMemoryTableScan; totals ride as " +
-          "BroadcastExchange sides.\n\n" +
-          s"```\n${plan.trim}\n```\n"
-      } finally { st.unpersist(); () }
-    }
-    locally {
-      val (lm, toks) = graft.ops.Corpus.bigramLogProbLazy(
-        Tables.documents(spark, sfDir), "doc_id", "text", lambda = 0.7)
-      try {
-        val plan = lm.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        sb ++= "\n## q_bigram_logprob (lazy stage)\n\n" +
-          "Interpolated-bigram LM: ONE corpus scan — the token arrays are " +
-          "persisted and BOTH the unigram and bigram explodes read the " +
-          "InMemoryTableScan; model tables are type-level equi-joins, " +
-          "document text never shuffles.\n\n" +
-          s"```\n${plan.trim}\n```\n"
-      } finally { toks.unpersist(); () }
+      val plan = PlanDump.explain(spark, sfDir, name)
+      sb ++= s"\n## ${titles.getOrElse(name, name)}\n\n$why\n\n```\n${plan.trim}\n```\n"
     }
     Files.write(Paths.get(out), sb.toString.getBytes("UTF-8"))
     println(s"[plans] wrote $out")

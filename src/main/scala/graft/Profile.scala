@@ -1,11 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness for the optimization rounds (guide §1: measure
-  * first). Runs named queries under the EXACT Bench session/warmup
-  * protocol and prints, per query, the Spark-job ladder — one line per
+  * first). Runs named queries under the Bench session and warm-up
+  * ([[Session]]) and prints, per query, the Spark-job ladder — one line per
   * job with wall ms, stage/task counts and shuffle bytes — plus the
   * inter-job driver gaps. Distinguishes "many tiny jobs" (driver/plan/
   * fixed-overhead bound) from "one slow stage" (compute/shuffle bound),
@@ -16,40 +15,40 @@ import org.apache.spark.sql.SparkSession
   */
 object Profile {
 
-  private final class JobLog extends SparkListener {
-    final case class Job(id: Int, desc: String, start: Long,
-                         var end: Long = 0L, var stages: Int = 0,
-                         var tasks: Int = 0, var shuffleReadMB: Double = 0.0,
-                         var shuffleWriteMB: Double = 0.0)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+  private[graft] final case class Job(id: Int, desc: String, start: Long,
+                                      var end: Long = 0L, var stages: Int = 0,
+                                      var tasks: Int = 0, var shuffleReadMB: Double = 0.0,
+                                      var shuffleWriteMB: Double = 0.0)
+
+  /** Per-job wall time, stages, tasks and shuffle bytes. A completed stage
+    * counts for the job whose `SparkListenerJobStart.stageIds` first listed
+    * it, so jobs that overlap (`inParallel`, `fetchSyncMany`) keep their own
+    * stages. */
+  private[graft] final class JobLog extends SparkListener {
+    val jobs = scala.collection.concurrent.TrieMap.empty[Int, Job]
+    private val stageJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
     override def onJobStart(js: SparkListenerJobStart): Unit = {
       val desc = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .orElse(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))))
+        .flatMap(p => Option(p.getProperty("spark.job.description"))
+          .orElse(Option(p.getProperty("callSite.short"))))
         .getOrElse("")
       jobs.put(js.jobId, Job(js.jobId, desc, js.time))
-      order.add(js.jobId); ()
+      js.stageIds.foreach(stageJob.putIfAbsent(_, js.jobId))
     }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-      Option(jobs.get(je.jobId)).foreach(_.end = je.time)
-    }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      jobs.get(je.jobId).foreach(_.end = je.time)
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val info = sc.stageInfo
-      // attribute the stage to the most recent open job (best effort)
-      val openIds = new scala.collection.mutable.ArrayBuffer[Int]
-      jobs.values().forEach(j => if (j.end == 0L) openIds += j.id)
-      val target = if (openIds.nonEmpty) Some(openIds.max)
-        else { val it = order.iterator(); var last = -1; while (it.hasNext) last = it.next(); if (last >= 0) Some(last) else None }
-      target.flatMap(id => Option(jobs.get(id))).foreach { j =>
+      stageJob.get(info.stageId).flatMap(jobs.get).foreach { j =>
         j.stages += 1
         j.tasks += info.numTasks
         j.shuffleReadMB += info.taskMetrics.shuffleReadMetrics.totalBytesRead / 1e6
         j.shuffleWriteMB += info.taskMetrics.shuffleWriteMetrics.bytesWritten / 1e6
       }
     }
-    def reset(): Unit = { jobs.clear(); order.clear() }
+    /** Jobs in start order. */
+    def ordered: Seq[Job] = jobs.values.toSeq.sortBy(_.id)
+    def reset(): Unit = { jobs.clear(); stageJob.clear() }
   }
 
   def main(args: Array[String]): Unit = {
@@ -57,56 +56,10 @@ object Profile {
     val names = if (args.length > 1) args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
                 else Seq.empty
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogHygiene.install()
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    // Bench-identical warmups (abbreviated: codegen + parquet + sync stack)
-    spark.range(0, 100000).selectExpr("sum(id)").collect()
-    spark.read.parquet(Tables.path(sfDir, "region")).count()
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(Tables.path(sfDir, "lineitem"))
-        .where(col("l_shipdate") > lit("1995-01-01"))
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      val or = spark.read.parquet(Tables.path(sfDir, "orders"))
-        .select(col("o_orderkey"), col("o_orderdate"))
-      li.join(or, li("l_orderkey") === or("o_orderkey"))
-        .groupBy(col("o_orderdate"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-        .orderBy(col("rev").desc).limit(5).count()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    locally {
-      import org.apache.spark.sql.functions._
-      import graft.catalog.{PipeSpec, PipeKeys, ColumnRoles}
-      val root = java.nio.file.Files.createTempDirectory("graft_prof_warm").toString
-      val srvDir = java.nio.file.Files.createTempDirectory("graft_prof_warm_srv").toString
-      val srv = new graft.server.PipeServer(spark, srvDir)
-      try {
-        val eng = new graft.sync.SyncEngine(spark, root,
-          storeFactory = graft.storage.ApiStore.factory(srv.url))
-        val spec = PipeSpec(PipeKeys("warm", "warm"),
-          columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
-        val ev = Tables.events(spark, sfDir).where(col("event_id") < 600)
-        eng.sync(spec, ev.where(col("event_id") < 400))
-        eng.sync(spec, ev.where(col("event_id") >= 200)
-          .withColumn("value", col("value") + 1))
-        eng.getData(spec).count()
-      } finally {
-        srv.stop()
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      }
-    }
+    val spark = Session.local()
+    Session.warm(spark, sfDir)
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
 
@@ -117,8 +70,7 @@ object Profile {
       val wall = (System.nanoTime() - t0) / 1e6
       // drain listener bus so late job-end events land (no public flush API)
       Thread.sleep(250)
-      val ids = { val b = scala.collection.mutable.ArrayBuffer[Int](); val it = log.order.iterator(); while (it.hasNext) b += it.next(); b }
-      val jobs = ids.flatMap(id => Option(log.jobs.get(id)))
+      val jobs = log.ordered
       val jobMs = jobs.map(j => (j.end - j.start).toDouble).sum
       println(f"== $label%-44s wall ${wall / 1000}%8.3f s  jobs ${jobs.size}%3d  in-job ${jobMs / 1000}%8.3f s  driver-gap ${(wall - jobMs) / 1000}%8.3f s")
       var prevEnd = 0L
@@ -142,8 +94,7 @@ object Profile {
             Seq(s"$name[$rep]" -> (() => { SparkEntry.queries(name)(spark, sfDir).count(); () }))
         }
         phases.foreach { case (l, b) => runPhase(l, b) }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        Session.sweep(spark)
       }
     }
     spark.stop()

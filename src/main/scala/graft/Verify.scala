@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import graft.Session.{fixed, json}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -24,61 +25,19 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * serially, against a quiet JVM before it is reported.
   */
 object Verify {
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpusRaw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = scala.util.Try(cpusRaw.trim.toInt).toOption.filter(_ >= 1).getOrElse(4)
-    // pin the JVM default zone too: embedded-JDBC (Derby) timestamp
-    // round-trips render wall-clock in the JVM zone, not the session zone
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Message-matching filter for the two known-benign WARN floods
-    // (localCheckpoint lineage truncation, allowlisted unpartitioned
-    // windows) — see LogHygiene for why a package-wide ERROR was wrong.
-    LogHygiene.install()
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b runs a subset.
-    // The driver sets no env, so its run always dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else {
-        // a typo'd name matching nothing would write no results and exit 0
-        // — the developer would read that as a pass. A stderr warning is
-        // lost in Spark log noise, so unknown names fail HARD.
-        val unknown = only -- SparkEntry.queries.keySet
-        if (unknown.nonEmpty) {
-          System.err.println(s"[verify] ERROR: unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(", ")}")
-          spark.stop()
-          sys.exit(2)
-        }
-        SparkEntry.queries.view.filterKeys(only).toMap
-      }
+    // Local iteration: SPARK_GRAFT_ONLY=q_a,q_b runs a subset; unset,
+    // every query is dumped.
+    val subset = Session.only(SparkEntry.queries)
+    val selected = subset.getOrElse(SparkEntry.queries)
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     val k = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1)
       .getOrElse(math.max(1, math.min(6, cpus / 2)))
     val (okN, failN) = runAll(spark, sfDir, outDir, selected, k,
-      digestPath = if (only.isEmpty) Some("VERIFY_REPORT.json") else None)
+      digestPath = if (subset.isEmpty) Some("VERIFY_REPORT.json") else None)
     // Always exit 0: the per-query record (parquet present/absent) IS the
     // signal; a non-zero exit could make the driver discard the whole
     // partial report — the exact zeroing this rewrite exists to prevent.
@@ -140,11 +99,11 @@ object Verify {
     // queries so memo-backed oracle SQL is always rendered post-run.
     def rewriteOracle(): Unit = {
       val doneNow = completed
-      val json = SparkEntry.oracleSql
+      val body = SparkEntry.oracleSql
         .filter { case (k, _) => doneNow.contains(k) }
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
       val tmp = Paths.get(s"$outDir/oracle_sql.json.tmp")
-      Files.writeString(tmp, json)
+      Files.writeString(tmp, body)
       Files.move(tmp, Paths.get(s"$outDir/oracle_sql.json"),
         StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     }
@@ -154,26 +113,22 @@ object Verify {
     // report.json — rewritten atomically after every batch — proves what
     // ran, green or red, independently of any downstream compare: per-query
     // ok/rows/seconds, plus run totals. A partial dir is self-describing.
-    // Locale.ROOT: a comma-decimal default locale (de_DE etc.) would make
-    // f-interpolation emit "1,23" and the JSON unparseable (ADVICE r14)
-    def num(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
     def rewriteReport(): Unit = {
       val entries = selected.keys.toSeq.sorted.flatMap { k =>
         if (completed.contains(k)) {
           val (rows, secs) = stats.getOrDefault(k, (-1L, -1.0))
-          Some(s"${q(k)}: {\"ok\": true, \"rows\": $rows, \"seconds\": ${num(secs, 2)}}")
+          Some(s"${json(k)}: {\"ok\": true, \"rows\": $rows, \"seconds\": ${fixed(secs, 2)}}")
         } else Option(errors.get(k)).map { err =>
-          s"${q(k)}: {\"ok\": false, \"error\": ${q(err)}}"
+          s"${json(k)}: {\"ok\": false, \"error\": ${json(err)}}"
         }
       }
-      val json =
-        s"""{"sf_dir": ${q(sfDir)}, "total": ${selected.size}, """ +
+      val body =
+        s"""{"sf_dir": ${json(sfDir)}, "total": ${selected.size}, """ +
         s""""ok": ${completed.size}, "failed": ${errors.size}, """ +
-        s""""elapsed_seconds": ${num((System.nanoTime() - runStart) / 1e9, 1)}, """ +
+        s""""elapsed_seconds": ${fixed((System.nanoTime() - runStart) / 1e9, 1)}, """ +
         s""""queries": ${entries.mkString("{", ", ", "}")}}"""
       val tmp = Paths.get(s"$outDir/report.json.tmp")
-      Files.writeString(tmp, json)
+      Files.writeString(tmp, body)
       Files.move(tmp, Paths.get(s"$outDir/report.json"),
         StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
       // The repo-carried digest (r14 verdict item 1): CORRECTNESS_r12-r14
@@ -187,11 +142,11 @@ object Verify {
       // digest with a partial one.
       digestPath.foreach { path =>
         val fails = selected.keys.toSeq.sorted
-          .flatMap(k => Option(errors.get(k)).map(e => s"${q(k)}: ${q(e)}"))
+          .flatMap(k => Option(errors.get(k)).map(e => s"${json(k)}: ${json(e)}"))
         val digest =
-          s"""{"sf_dir": ${q(sfDir)}, "total": ${selected.size}, """ +
+          s"""{"sf_dir": ${json(sfDir)}, "total": ${selected.size}, """ +
           s""""ok": ${completed.size}, "failed": ${errors.size}, """ +
-          s""""elapsed_seconds": ${num((System.nanoTime() - runStart) / 1e9, 1)}, """ +
+          s""""elapsed_seconds": ${fixed((System.nanoTime() - runStart) / 1e9, 1)}, """ +
           s""""generated_at_epoch_ms": ${System.currentTimeMillis()}, """ +
           s""""failures": ${fails.mkString("{", ", ", "}")}}"""
         val dtmp = Paths.get(s"$path.tmp")
@@ -219,22 +174,17 @@ object Verify {
       }
     }
 
-    // Batch-boundary storage sweep (the same per-query isolation the
-    // sequential dump had): without it, 140+ queries of pinned cache/
-    // localCheckpoint blocks in one JVM build into GC pressure on the
-    // later queries. Runs ONLY with no query in flight.
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-
     ordered.grouped(k).foreach { batch =>
       val threads = batch.map { case (name, fn) =>
         val t = new Thread(() => runOne(name, fn), s"verify-$name")
         t.start(); t
       }
       threads.foreach(_.join())
-      sweep()
+      // Batch-boundary storage sweep (the same per-query isolation the
+      // sequential dump had): without it, 140+ queries of pinned cache/
+      // localCheckpoint blocks in one JVM build into GC pressure on the
+      // later queries. Runs ONLY with no query in flight.
+      Session.sweep(spark)
       rewriteOracle()
       rewriteReport()
     }
@@ -247,7 +197,7 @@ object Verify {
       System.err.println(s"[verify] retrying ${failedOnce.size} failed serially")
       failedOnce.foreach { case (name, fn) =>
         runOne(name, fn)
-        sweep()
+        Session.sweep(spark)
       }
       rewriteOracle()
       rewriteReport()

@@ -28,15 +28,6 @@ object TimeBounds {
 
   def apply(df: DataFrame, dtCol: String, begin: Option[Instant], end: Option[Instant]): DataFrame =
     df.where(predicate(dtCol, begin, end))
-
-  /** Integer (epoch) axis variant — the reference supports int datetime axes
-    * with a precision unit (meerschaum/utils/dtypes/__init__.py:58-89).
-    */
-  def predicateEpoch(dtCol: String, begin: Option[Long], end: Option[Long]): Column = {
-    val b = begin.map(v => col(dtCol) >= lit(v)).getOrElse(lit(true))
-    val e = end.map(v => col(dtCol) < lit(v)).getOrElse(lit(true))
-    b && e
-  }
 }
 
 /** Integer-epoch datetime axes with a precision unit — the reference treats
@@ -133,13 +124,6 @@ object ChunkGrid {
       }
       .toSeq
   }
-
-  /** Chunk label column for grouping rows into epoch-aligned windows —
-    * distributed equivalent of iterating chunk bounds (used by dedup/verify
-    * per-chunk work and as a partition column for storage).
-    */
-  def labelColumn(dtCol: String, interval: String): Column =
-    window(col(dtCol), interval).getField("start")
 }
 
 /** Time-axis precision: unit + interval multiple + rounding mode — the

@@ -39,8 +39,6 @@ final class AcAutomaton private (
     private val dict: Array[Int],
     val patterns: Array[String]) extends Serializable {
 
-  def nPatterns: Int = patterns.length
-
   private def step(from: Int, c: Char): Int = {
     var state = from
     while (true) {

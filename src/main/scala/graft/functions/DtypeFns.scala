@@ -52,10 +52,6 @@ object DtypeFns {
   val wkbToWkt = udf((wkb: Array[Byte]) =>
     Option(wkb).map(GeoWkb.wkbToWkt).orNull)
 
-  /** WKB bytes → lowercase hex (the reference's default `wkb_hex` wire
-    * format). */
-  def wkbHex(c: Column): Column = bytesToHex(c)
-
   /** GeoPackage blob → plain WKB (non-GPKG bytes pass through). */
   val gpkgToWkb = udf((b: Array[Byte]) =>
     Option(b).map(GeoWkb.gpkgToWkb).orNull)

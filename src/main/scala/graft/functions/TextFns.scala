@@ -64,11 +64,6 @@ object TextFns {
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,!?;:]", ""))
 
-  /** Uppercase character ratio. */
-  def upperRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[A-Z]", ""))).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
-
   /** Unicode normalization (UTR #15) — native generated expression
     * ([[graft.expressions.UnicodeNormalize]]); `form` ∈ NFC/NFD/NFKC/NFKD.
     * The canonical first step before fingerprinting or shingling: composed
@@ -94,9 +89,6 @@ object TextFns {
   /** Rolling-hash document fingerprint (content-addressed identity for
     * exact dedup): md5 of the canonicalized text. */
   def fingerprint(text: Column): Column = md5(lower(trim(text)))
-
-  /** 64-bit content hash for bucketing (xxhash64 — cheap, codegen'd). */
-  def contentHash64(text: Column): Column = xxhash64(lower(trim(text)))
 
   /** PII scrubbing: replace email addresses and phone-number-shaped digit
     * runs with typed placeholder tokens. Patterns restricted to syntax that

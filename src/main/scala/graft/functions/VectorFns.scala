@@ -33,18 +33,6 @@ object VectorFns {
   def cosineToQuery(a: Column, query: Seq[Double]): Column =
     cosine(a, typedLit(query.toArray))
 
-  /** Random-hyperplane (sign) LSH signature: `nBits` deterministic
-    * pseudo-random hyperplanes derived from a seed; bit i = sign(dot(v, h_i)).
-    * Buckets collide for nearby directions — the classic SRP-LSH scheme for
-    * cosine similarity. Returns a compact Long bucket id.
-    */
-  def srpSignature(vec: Column, dim: Int, nBits: Int, seed: Long = 42L): Column = {
-    val rng = new scala.util.Random(seed)
-    val planes: Seq[Seq[Double]] =
-      Seq.fill(nBits)(Seq.fill(dim)(rng.nextGaussian()))
-    srpSignaturePlanes(vec, planes)
-  }
-
   /** Signature from explicit hyperplanes (shared with the oracle SQL
     * generator so both engines hash identically). All planes project in
     * ONE generated pass over the vector. */

@@ -178,6 +178,4 @@ final class JobRunner(engine: SyncEngine,
 
   /** Stop and forget a job — the reference's `delete_job`. */
   def delete(name: String): Unit = { stop(name); jobs.remove(name); () }
-
-  def stopAll(): Unit = jobs.values.foreach(_.stop())
 }

@@ -1603,12 +1603,11 @@ object Corpus {
       "need lambda3, lambda2 > 0 with lambda3 + lambda2 < 1")
     val lam23 = lambda3 + lambda2
     val lamU  = 1.0d - lambda3 - lambda2
-    // spread BEFORE the persist (re-tested r16): r15 measured spreading
-    // this table net-negative when ~13 lazy subtrees each fanned its
-    // partitioning into every stage; the fused dual ladder has half the
-    // consumers and the 1-partition cached table serialized every map
-    // side behind one task (profiled 1.65 s single-task tokenize + every
-    // downstream stage at 1 task)
+    // NOT spread before the persist: spreading this table was measured
+    // net-negative in r15 (~13 lazy subtrees each fanned its partitioning
+    // into every stage) and re-tested in r16 against the fused dual
+    // ladder, where it stayed net-negative: 4.90 s spread vs 4.41 s
+    // unspread in an adjacent-window A/B (OPTIMIZATION_r16.md §4)
     val toks = docs
         .select(col(idCol), inDom.as("__in"),
           filter(TextFns.tokens(lower(col(textCol))),

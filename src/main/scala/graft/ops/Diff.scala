@@ -105,19 +105,6 @@ object Diff {
       if (nullSafe) l(k) <=> r(bkName(k)) else l(k) === r(bkName(k))
     }.reduce(_ && _)
 
-  /** Split a delta into (unseen → insert, update → modify) on the pipe's
-    * index columns (reference `filter_existing`). `backtrack` is the slice of
-    * the target inside the sync window — small relative to the target, so the
-    * planner will usually broadcast it.
-    */
-  def unseenUpdateSplit(delta: DataFrame, backtrack: DataFrame, keys: Seq[String],
-                        nullSafe: Boolean = false): (DataFrame, DataFrame) = {
-    val bt = bkKeys(backtrack, keys)
-    val unseen = delta.join(bt, keyCondition(delta, bt, keys, nullSafe), "left_anti")
-    val update = delta.join(bt, keyCondition(delta, bt, keys, nullSafe), "left_semi")
-    (unseen, update)
-  }
-
   /** Diff incoming against the backtrack window and TAG each delta row with
     * a boolean `flag` column: true = key exists in the target (update),
     * false = unseen (insert). One left join instead of an anti + a semi —

@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{Duration, LocalDateTime}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.SparkSession
@@ -104,9 +104,11 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
         v
     }
 
+  private def storedSchema: StructType =
+    StructType.fromDDL(schemaDdl.getOrElse(call("GET", u("schema"))))
+
   private def fetchDf(dataUrls: Seq[String]): DataFrame = {
-    val ddl = schemaDdl.getOrElse(call("GET", u("schema")))
-    val schema = StructType.fromDDL(ddl)
+    val schema = storedSchema
     import spark.implicits._
     // executor-side pulls (tasks fetch, not the driver) — one task per
     // window URL so ranged reads stream k-way concurrently from the server
@@ -212,7 +214,8 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
       throw new IllegalArgumentException("readIn requires a datetime axis"))
     if (!exists) throw new IllegalArgumentException(
       s"pipe $target does not exist")
-    if (values.isEmpty) return read.where(lit(false))
+    if (values.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), storedSchema)
     val enc0 = values.map(encodeAny)
     val kinds = enc0.map(_._1).distinct
     require(kinds.size == 1, s"mixed value kinds in readIn: $kinds")

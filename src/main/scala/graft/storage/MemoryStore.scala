@@ -141,8 +141,4 @@ object MemoryStore {
   /** Store factory for [[graft.sync.SyncEngine]]. */
   val factory: (SparkSession, String, PipeSpec) => InstanceStore =
     (s, root, spec) => new MemoryStore(s, root, spec)
-
-  /** Drop every table under a root (test isolation). */
-  def clearRoot(root: String): Unit =
-    tables.keys.filter(_._1 == root).foreach(tables.remove)
 }

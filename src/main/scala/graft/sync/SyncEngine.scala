@@ -771,7 +771,7 @@ final class SyncEngine(spark: SparkSession, root: String,
   def deduplicate(spec: PipeSpec, extraOrder: Seq[String] = Seq.empty): Long = {
     val store = storage(spec)
     if (!store.exists) return 0L
-    val cols  = store.read.columns.toSeq
+    val cols  = targetSchema(store).fieldNames.toSeq
     val keys  = (spec.columns.datetime.toSeq ++ spec.columns.syncKeys)
       .distinct.filter(cols.contains)
     val order = (spec.columns.datetime.toSeq ++ extraOrder)

@@ -200,7 +200,4 @@ object Dtypes {
       case _ => MStr
     }
   }
-
-  def toSchema(dtypes: Map[String, MrsmType]): StructType =
-    StructType(dtypes.toSeq.map { case (n, t) => StructField(n, t.spark, nullable = true) })
 }

@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -126,4 +126,49 @@ class SyncTargetReadSpec extends SparkSpec {
     assert(table == pTable)
     assert(calls.getOrElse("read", 0) >= 2, s"engine store calls: $calls")
   }
+
+  for ((backend, factory) <- Seq("ApiStore" -> (() => api), "ValkeyStore" -> (() => valkey)))
+    test(s"a deduplicate over $backend reads the schema, never the whole table") {
+      val sp = spec(s"dedup_${backend.toLowerCase}", withAxis)
+      def dedup(base: Factory): (Long, Seq[Row], Map[String, Int]) = {
+        val calls = new ConcurrentHashMap[String, AtomicInteger]()
+        val eng = new SyncEngine(spark, tmpDir(), storeFactory = counting(base, calls))
+        eng.sync(sp, events(0, 400, _ => 0))
+        eng.storage(sp).append(events(0, 40, _ => 1)) // out-of-band duplicates
+        calls.clear()
+        val removed = eng.deduplicate(sp, extraOrder = Seq("value"))
+        val dedupCalls = calls.asScala.map { case (k, v) => k -> v.get }.toMap
+        (removed, rows(eng.getData(sp)), dedupCalls)
+      }
+      val (removed, table, calls) = dedup(factory())
+      val (pRemoved, pTable, _) = dedup(parquet)
+      assert(calls.getOrElse("read", 0) == 0, s"engine store calls: $calls")
+      assert(calls.getOrElse("deduplicate", 0) == 1, s"engine store calls: $calls")
+      assert(removed == 40L && removed == pRemoved)
+      assert(table.size == 400)
+      assert(table == pTable)
+    }
+
+  test("ApiStore.readIn of no values is an empty frame of the stored schema, without a job") {
+    val store = api(spark, tmpDir(), spec("read_in_empty", withAxis))
+    val stored = events(0, 50, _ => 0)
+    store.create(stored)
+    val ddl = store.schemaDdl // warm the schema cache
+    val jobs = new AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val empty = try store.readIn(Seq.empty) finally {
+      org.apache.spark.GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0)
+    assert(ddl.map(org.apache.spark.sql.types.StructType.fromDDL).contains(empty.schema))
+    assert(empty.schema.fieldNames.toSeq == stored.columns.toSeq)
+    assert(empty.isEmpty)
+  }
 }
