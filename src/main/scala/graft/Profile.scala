@@ -6,9 +6,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * first). Runs named queries under the Bench session and warm-up
   * ([[Session]]) and prints, per query, the Spark-job ladder — one line per
   * job with wall ms, stage/task counts and shuffle bytes — plus the
-  * inter-job driver gaps. Distinguishes "many tiny jobs" (driver/plan/
-  * fixed-overhead bound) from "one slow stage" (compute/shuffle bound),
-  * which is the first fork in the optimization playbook.
+  * inter-job driver gaps (see [[timeline]]). Distinguishes "many tiny
+  * jobs" (driver/plan/fixed-overhead bound) from "one slow stage"
+  * (compute/shuffle bound), which is the first fork in the optimization
+  * playbook.
   *
   * Usage: `sbt "runMain graft.Profile <sfDir> q_a,q_b [reps]"` (or via
   * java -cp with the Spark jars). Not part of the driver surface.
@@ -51,6 +52,24 @@ object Profile {
     def reset(): Unit = { jobs.clear(); stageJob.clear() }
   }
 
+  /** Milliseconds inside at least one job — the union of the job
+    * intervals, so jobs that overlap (AQE stages, `inParallel`) count once
+    * — and each job, in start order, with its gap: the time since the
+    * latest end among the jobs started before it, 0 while one still
+    * runs. */
+  private[graft] def timeline(jobs: Seq[Job]): (Long, Seq[(Job, Long)]) = {
+    var inJob = 0L
+    var latest = Long.MinValue
+    val gaps = jobs.sortBy(j => (j.start, j.id)).map { j =>
+      val end = math.max(j.start, j.end)
+      val gap = if (latest == Long.MinValue) 0L else math.max(0L, j.start - latest)
+      inJob += math.max(0L, end - math.max(j.start, latest))
+      latest = math.max(latest, end)
+      j -> gap
+    }
+    (inJob, gaps)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -70,16 +89,12 @@ object Profile {
       val wall = (System.nanoTime() - t0) / 1e6
       // drain listener bus so late job-end events land (no public flush API)
       Thread.sleep(250)
-      val jobs = log.ordered
-      val jobMs = jobs.map(j => (j.end - j.start).toDouble).sum
-      println(f"== $label%-44s wall ${wall / 1000}%8.3f s  jobs ${jobs.size}%3d  in-job ${jobMs / 1000}%8.3f s  driver-gap ${(wall - jobMs) / 1000}%8.3f s")
-      var prevEnd = 0L
-      jobs.foreach { j =>
-        val gap = if (prevEnd == 0L) 0.0 else (j.start - prevEnd).toDouble
-        prevEnd = j.end
+      val (jobMs, jobs) = timeline(log.ordered)
+      println(f"== $label%-44s wall ${wall / 1000}%8.3f s  jobs ${jobs.size}%3d  in-job ${jobMs / 1000.0}%8.3f s  driver-gap ${(wall - jobMs) / 1000}%8.3f s")
+      jobs.foreach { case (j, gap) =>
         val d = (j.end - j.start).toDouble
         if (d >= 40 || gap >= 40)
-          println(f"   job ${j.id}%4d ${d / 1000}%7.3f s (gap ${gap / 1000}%6.3f) stages ${j.stages}%2d tasks ${j.tasks}%4d shufR ${j.shuffleReadMB}%8.2f MB shufW ${j.shuffleWriteMB}%8.2f MB  ${j.desc.take(90)}")
+          println(f"   job ${j.id}%4d ${d / 1000}%7.3f s (gap ${gap / 1000.0}%6.3f) stages ${j.stages}%2d tasks ${j.tasks}%4d shufR ${j.shuffleReadMB}%8.2f MB shufW ${j.shuffleWriteMB}%8.2f MB  ${j.desc.take(90)}")
       }
     }
 

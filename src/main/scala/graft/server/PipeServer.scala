@@ -5,15 +5,17 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDateTime
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.catalog.{PipeCatalogStore, PipeSpec}
 import graft.storage.{InstanceStore, PipeStorage, StrayScan}
+import graft.sync.SyncEngine
 
 /** HTTP pipe-instance server — the serving half of the reference's API
   * connector (the reference runs a FastAPI app, `meerschaum/api/`, whose
@@ -34,19 +36,23 @@ import graft.storage.{InstanceStore, PipeStorage, StrayScan}
   *   - GET  `in?values&kind` → ND-JSON rows
   *   - POST `stage?wid&pid&att&seq` (body: ND-JSON) → buffer one batch of
   *     one task attempt; POST `stage_done?wid&pid&att&n` seals the attempt
-  *   - POST `commit?wid&mode&keys&stray…` → apply staged patch atomically
-  *     (one complete sealed attempt per partition — retry/speculation-safe)
+  *   - POST `commit?wid&mode&keys&stray…` → one store write of the staged
+  *     rows; POST `sync?wid&schema&check` → the server's `SyncEngine.sync`
+  *     of them into the store, answering the `SyncResult` and stored DDL.
+  *     Both take one complete sealed attempt per partition (retry- and
+  *     speculation-safe) and remove the staged parts either way
   *   - POST `clear?sql&lo…` | `dedup?keys&orderBy` | `maxid?v`
   *   - POST `lock?op&token&ttlMs` → TTL'd advisory writer lease
   *   - POST `compact` | `vacuum`;  DELETE `drop`
   *
   * Scale shape: uploads are executor-parallel (each task POSTs its own
-  * `stage` part; `commit` is one driver call that applies the whole patch
-  * under the server store's write lease), so row data never funnels
-  * through the CLIENT driver. The server itself materializes responses —
-  * the same driver-funnel the reference API accepts (`_pipes.py:430-470`);
-  * a production deployment shards by pipe across server instances, which
-  * this design permits because all state is per-(root, target).
+  * `stage` part; `commit` or `sync` is one driver call that applies the
+  * whole batch under the server store's write lease), so row data never
+  * funnels through the CLIENT driver. The server itself materializes
+  * responses — the same driver-funnel the reference API accepts
+  * (`_pipes.py:430-470`); a production deployment shards by pipe across
+  * server instances, which this design permits because all state is
+  * per-(root, target).
   */
 final class PipeServer(
     spark: SparkSession, baseDir: String,
@@ -180,53 +186,35 @@ final class PipeServer(
 
       case ("POST", "commit") =>
         val (_, st) = store(root, target)
-        val wid = q("wid")
-        val schema = StructType.fromDDL(q("schema"))
-        val files = selectStaged(wid)
-        val df: DataFrame =
-          if (files.nonEmpty) spark.read.schema(schema).options(jsonOpts)
-            .json(files.map(_.getAbsolutePath): _*)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        try q("mode") match {
-          case "create"    => st.create(df)
-          case "overwrite" => st.overwrite(df)
-          case "append"    => st.append(df)
-          case "upsert" | "delta" =>
-            val keys = q("keys").split(",").toSeq
-            val stray = q.getOrElse("stray", "full") match {
-              case "off"  => StrayScan.Off
-              case "full" => StrayScan.Full
-              case "bounded" => StrayScan.Bounded(
-                decodeAny(q("sLoK"), q("sLo")), decodeAny(q("sHiK"), q("sHi")))
-            }
-            val kc = q.get("kc").filter(_.nonEmpty)
-              .map(_.split("\n").toSeq.filter(_.nonEmpty))
-            if (q("mode") == "upsert") st.upsert(df, keys, kc, stray)
-            else {
-              // each diff half arrives under its OWN write id (client
-              // applyDelta): `wid` carries the inserts, `widU` the updates,
-              // so each half's ND-JSON parses exactly once and the (small)
-              // update half never scans the (large) insert half
-              val widU = q.getOrElse("widU", throw new IllegalArgumentException(
-                "delta mode requires widU (separate staged write id for the update half)"))
-              val filesU = selectStaged(widU)
-              val dfU: DataFrame =
-                if (filesU.nonEmpty) spark.read.schema(schema).options(jsonOpts)
-                  .json(filesU.map(_.getAbsolutePath): _*)
-                else spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-              st.upsert(dfU, keys, kc, stray)
-              st.append(df)
-            }
-          case m => throw new IllegalArgumentException(s"unknown mode: $m")
-        } finally {
-          (Seq(wid) ++ q.get("widU")).foreach { w =>
-            val d = stagingDir(w)
-            d.listFiles().foreach(_.delete()); d.delete(); ()
+        withStaged(q("wid"), StructType.fromDDL(q("schema"))) { df =>
+          q("mode") match {
+            case "create"    => st.create(df)
+            case "overwrite" => st.overwrite(df)
+            case "append"    => st.append(df)
+            case "upsert" =>
+              val stray = q.getOrElse("stray", "full") match {
+                case "off"  => StrayScan.Off
+                case "full" => StrayScan.Full
+                case "bounded" => StrayScan.Bounded(
+                  decodeAny(q("sLoK"), q("sLo")), decodeAny(q("sHiK"), q("sHi")))
+              }
+              st.upsert(df, q("keys").split(",").toSeq,
+                q.get("kc").filter(_.nonEmpty).map(_.split("\n").toSeq.filter(_.nonEmpty)),
+                stray)
+            case m => throw new IllegalArgumentException(s"unknown mode: $m")
           }
         }
         respond(x, 200, "ok")
+
+      case ("POST", "sync") =>
+        val (spec, st) = store(root, target)
+        val r = withStaged(q("wid"), StructType.fromDDL(q("schema"))) { df =>
+          new SyncEngine(spark, rootDir(root), storeFactory = (_, _, _) => st)
+            .sync(spec, df, checkExisting = q("check").toBoolean)
+        }
+        respond(x, 200, graft.Session.mapper.writeValueAsString(Map(
+          "inserted" -> r.inserted, "updated" -> r.updated, "attempts" -> r.attempts,
+          "attemptErrors" -> r.attemptErrors.asJava, "schema" -> st.schemaDdl.getOrElse("")).asJava))
 
       case ("POST", "clear") =>
         val (_, st) = store(root, target)
@@ -296,7 +284,7 @@ final class PipeServer(
 
   // ── helpers ────────────────────────────────────────────────────────────
 
-  private val stageDir = {
+  private[graft] val stageDir = {
     val d = java.nio.file.Files.createTempDirectory("graft_server_stage")
     d.toFile.deleteOnExit(); d
   }
@@ -305,6 +293,15 @@ final class PipeServer(
     val d = stageDir.resolve(wid).toFile
     d.mkdirs(); d
   }
+
+  /** `body` over the rows staged under `wid` (see [[selectStaged]]); the
+    * staging dir is removed either way. */
+  private def withStaged[A](wid: String, schema: StructType)(body: DataFrame => A): A =
+    try {
+      val files = selectStaged(wid).map(_.getAbsolutePath)
+      body(if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+           else spark.read.schema(schema).options(jsonOpts).json(files: _*))
+    } finally { val d = stagingDir(wid); d.listFiles().foreach(_.delete()); d.delete(); () }
 
   /** Part files of exactly ONE sealed attempt per partition. A partition
     * with parts but no attempt that both sealed (`.done`) and has all its

@@ -5,6 +5,8 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{Duration, LocalDateTime}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -13,6 +15,7 @@ import org.apache.spark.sql.SparkSession
 import graft.catalog.PipeSpec
 import graft.server.PipeServer
 import graft.sources.HttpFetch
+import graft.sync.SyncResult
 
 /** HTTP-backed [[InstanceStore]] — the client half of the API instance
   * connector (the reference's `connectors/api/_pipes.py:368-489`, which
@@ -22,19 +25,24 @@ import graft.sources.HttpFetch
   * contract suite over this store is the proof that the instance seam
   * survives serialization across a process boundary.
   *
-  * Scale shape: writes are executor-parallel (each partition POSTs its own
-  * staged part; one driver `commit` applies the patch under the server's
-  * write lease), so patch data never funnels through the client driver.
-  * Reads materialize eagerly (fetch + localCheckpoint) to give the same
-  * snapshot semantics as the other backends — a lazy HTTP scan could
-  * observe its own sync's mutation mid-plan. On the sync path reads are
-  * window-scale: the engine takes the target's schema from [[schemaDdl]]
-  * (cached process-wide, one GET at most) and fetches only the backtrack
-  * window through `readRange`; `read` (the whole table) runs only for a
-  * type-promotion rewrite or a pipe without a datetime envelope. Writes
-  * are patch-scale by construction (the engine diffs before it writes);
-  * bulk analytical reads belong on the parquet backend directly, exactly
-  * as in the reference deployment.
+  * Sync runs on the server, as in the reference (`connectors/api/
+  * _pipes.py:189-368` posts the frame and the API's own pipe syncs it):
+  * the client engine applies the pre-sync hook, dtype enforcement and
+  * autotime, then [[syncRemote]] stages the batch once and one `sync`
+  * call runs the server's engine — diff, one located write, minting and
+  * retries under the server store's lease. The client fetches no rows
+  * and takes no HTTP lease for it; the schema the server returns feeds
+  * the client catalog's dtype persistence. The other methods serve reads
+  * and [[graft.sync.SyncStrategy]] code.
+  *
+  * Scale shape: writes are executor-parallel (each partition POSTs its
+  * own staged part; one call applies it on the server), so patch
+  * data never funnels through the client driver. Reads materialize
+  * eagerly (fetch + localCheckpoint) to give the same snapshot semantics
+  * as the other backends — a lazy HTTP scan could observe its own sync's
+  * mutation mid-plan. The schema comes from [[schemaDdl]] (cached
+  * process-wide, one GET at most); bulk analytical reads belong on the
+  * parquet backend directly, exactly as in the reference deployment.
   *
   * Errors surface as the server-side exception class where the engine's
   * contracts depend on it (IllegalArgument/IllegalState), else IOException.
@@ -43,7 +51,7 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
                      val spec: PipeSpec) extends InstanceStore {
 
   import ApiStore._
-  import PipeServer.{encodeAny, jsonOpts, jsonOptsJava}
+  import PipeServer.{encodeAny, jsonOptsJava}
 
   private def target = spec.targetName
   private def dtCol: Option[String] = spec.columns.datetime
@@ -296,84 +304,22 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     upload(patch, "upsert", Seq("keys" -> keys.mkString(",")) ++ strayQ ++ kcQ)
   }
 
-  /** Both diff halves staged under ONE commit, each under its OWN write
-    * id: the server reads each half's ND-JSON exactly once. (The r10
-    * design rode both halves in one staging tagged by a `__graft_upd`
-    * column; the server then parsed the FULL patch once per half just to
-    * filter it — for the typical blind-heavy diff, the small update half
-    * paid a full-patch scan.) The two stagings run as ONE Spark job
-    * (r11 verdict: two sequential staging jobs paid the local[32]
-    * fixed job overhead twice per sync): the halves union client-side
-    * with a one-bit tag, and each task routes its rows to the right
-    * write id — the server-side per-wid layout is identical to two
-    * separate stagings, so parse-once is preserved. */
-  override def applyDelta(delta: DataFrame, updateFlag: String,
-                          keys: Seq[String], knownChunks: Option[Seq[String]],
-                          strayScan: StrayScan,
-                          located: Option[Seq[String]]): Unit = {
-    require(keys.nonEmpty, "applyDelta requires key columns")
-    val strayQ = strayScan match {
-      case StrayScan.Full => Seq("stray" -> "full")
-      case StrayScan.Off  => Seq("stray" -> "off")
-      case StrayScan.Bounded(lo, hi) =>
-        val (lk, lv) = encodeAny(lo); val (hk, hv) = encodeAny(hi)
-        Seq("stray" -> "bounded", "sLo" -> lv, "sLoK" -> lk,
-            "sHi" -> hv, "sHiK" -> hk)
-    }
-    val kcQ = knownChunks.map(c => Seq("kc" -> c.mkString("\n"))).getOrElse(Seq.empty)
-    val widU = java.util.UUID.randomUUID().toString
-    val widI = java.util.UUID.randomUUID().toString
-    val inserts = delta.where(!col(updateFlag)).drop(updateFlag)
-    stagePair(delta.where(col(updateFlag)).drop(updateFlag), widU, inserts, widI)
-    call("POST", u("commit", (Seq("wid" -> widI, "widU" -> widU,
-      "mode" -> "delta", "schema" -> inserts.schema.toDDL,
-      "keys" -> keys.mkString(",")) ++ strayQ ++ kcQ): _*))
-    invalidateSchema()
-  }
-
-  /** Stage two DataFrames under their own write ids in ONE Spark job.
-    * Same idempotency contract as [[stage]]: batches key on (partition,
-    * attempt, per-wid seq) and each attempt seals BOTH wids with its batch
-    * counts, so commit still applies exactly one complete attempt per
-    * partition per wid. Union partitions are side-homogeneous, but
-    * coalesce may merge across the seam — tasks route per ROW on the tag,
-    * which is correct either way. */
-  private def stagePair(dfA: DataFrame, widA: String,
-                        dfB: DataFrame, widB: String): Unit = {
-    val stageA = u("stage", "wid" -> widA); val doneA = u("stage_done", "wid" -> widA)
-    val stageB = u("stage", "wid" -> widB); val doneB = u("stage_done", "wid" -> widB)
-    def js(df: DataFrame, tag: Int) = df
-      .select(to_json(struct(df.columns.map(col).toIndexedSeq: _*), jsonOptsJava).as("j"),
-        lit(tag).as("t"))
-    val tagged = js(dfA, 0).unionByName(js(dfB, 1))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt))
-    val streams = math.max(1,
-      math.min(ApiStore.uploadParallelism, tagged.rdd.getNumPartitions))
-    tagged.coalesce(streams)
-      .foreachPartition { (it: Iterator[(String, Int)]) =>
-        val tc  = org.apache.spark.TaskContext.get()
-        val pid = tc.partitionId()
-        val att = tc.taskAttemptId()
-        val bufs = Array(new StringBuilder, new StringBuilder)
-        val rows = Array(0, 0)
-        val seqs = Array(0, 0)
-        val bases = Array(stageA, stageB)
-        def flush(t: Int): Unit = if (rows(t) > 0) {
-          HttpFetch.post(s"${bases(t)}&pid=$pid&att=$att&seq=${seqs(t)}",
-            bufs(t).result())
-          bufs(t).clear(); rows(t) = 0; seqs(t) += 1
-        }
-        it.foreach { case (j, t) =>
-          if (rows(t) > 0) bufs(t).append('\n')
-          bufs(t).append(j); rows(t) += 1
-          if (rows(t) == 10000) flush(t)
-        }
-        flush(0); flush(1)
-        // seal even when empty — commit must be able to tell "this attempt
-        // completed with no rows" from "this attempt died mid-stage"
-        HttpFetch.post(s"$doneA&pid=$pid&att=$att&n=${seqs(0)}", "")
-        HttpFetch.post(s"$doneB&pid=$pid&att=$att&n=${seqs(1)}", "")
-      }
+  /** The whole sync runs on the server: the batch stages once (the
+    * per-partition, per-attempt upload above) and one `sync` call runs the
+    * server's engine over its own store — the diff against the backtrack
+    * window, the apply as one write, autoincrement minting under the
+    * server store's lease, and the attempts of the engine's retry loop.
+    * The stored schema comes back with the counts and refreshes the
+    * schema cache. */
+  override def syncRemote(batch: DataFrame, checkExisting: Boolean): Option[SyncResult] = {
+    val wid = java.util.UUID.randomUUID().toString
+    stage(batch, wid)
+    val out = graft.Session.mapper.readTree(call("POST", u("sync", "wid" -> wid,
+      "schema" -> batch.schema.toDDL, "check" -> checkExisting.toString)))
+    ApiStore.schemaCache.put(schemaKey, Some(out.get("schema").asText()))
+    Some(SyncResult(out.get("inserted").asLong(), out.get("updated").asLong(),
+      out.get("attempts").asInt(),
+      out.get("attemptErrors").elements().asScala.map(_.asText()).toSeq))
   }
 
   // ── deletion / maintenance ─────────────────────────────────────────────

@@ -55,10 +55,7 @@ trait InstanceStore {
     * by the boolean column `updateFlag` (true = the row's key is stored
     * and the row replaces it). Default: two calls — the update half merges
     * chunk-scoped, the insert half appends (an append never pays a
-    * merge). REMOTE backends override to ship the tagged patch in ONE
-    * staged upload + ONE commit and split server-side: for a store a
-    * network away, the second round trip costs more than the split saves.
-    * Either half may be empty (callers skip all-empty calls).
+    * merge). Either half may be empty (callers skip all-empty calls).
     *
     * `located` is the set of [[rowLocation]] values of the rows the
     * updates replace, as the diff found them in the backtrack slice. A
@@ -73,6 +70,15 @@ trait InstanceStore {
     upsert(delta.where(col(updateFlag)).drop(updateFlag), keys, knownChunks, strayScan)
     append(delta.where(!col(updateFlag)).drop(updateFlag))
   }
+
+  /** Run the whole sync of `batch` where the data lives: a store a network
+    * away ships the prepared batch once and the instance's own engine runs
+    * the diff (or upsert, or blind append with `checkExisting = false`),
+    * the apply and its retries. `batch` has had the client-side steps
+    * (pre-sync hook, dtype enforcement, autotime). Some(result) when the
+    * store ran the sync; the default None makes the engine run it locally
+    * against this store's other methods. */
+  def syncRemote(batch: DataFrame, checkExisting: Boolean): Option[graft.sync.SyncResult] = None
 
   /** Where a stored row lives, for stores that can rewrite single files:
     * an expression that evaluates, on any frame this store's `read` or

@@ -29,9 +29,11 @@ import graft.storage.{PipeStorage, StrayScan}
   * compares the batch against a window, never the whole table; that is what
   * keeps a 100 TB target syncable (the window is broadcast-able in the
   * common case). The schema comes from `InstanceStore.schemaDdl`, so a
-  * backend whose `read` fetches the table (HTTP, KV) moves O(batch +
-  * window) rows per sync; the whole target is read only by a type-
-  * promotion rewrite and by the backtrack of a batch without an envelope.
+  * backend whose `read` fetches the table (KV) moves O(batch + window)
+  * rows per sync; the whole target is read only by a type-promotion
+  * rewrite and by the backtrack of a batch without an envelope. The HTTP
+  * instance ships the stamped batch once and its server runs this
+  * pipeline against its own store (`InstanceStore.syncRemote`).
   */
 /** Counts are derived from the BACKTRACK-WINDOW tag (the reference's
   * filter_existing split): in upsert mode a key whose existing row lives
@@ -88,7 +90,10 @@ final class SyncEngine(spark: SparkSession, root: String,
     * sync wholesale (reference plugin `sync()`, core/Pipe/_sync.py:201-261);
     * otherwise the standard diff-then-apply pipeline runs, bracketed by the
     * engine's [[SyncHooks]] and wrapped in a bounded [[Retry]] (the diff
-    * pipeline is idempotent, so a partially applied attempt re-converges). */
+    * pipeline is idempotent, so a partially applied attempt re-converges).
+    * A store whose [[graft.storage.InstanceStore.syncRemote]] runs the
+    * sync (the HTTP instance) gets the hooks, dtypes and autotime here and
+    * runs the pipeline and its retries itself. */
   def sync(spec: PipeSpec, batch0: DataFrame): SyncResult =
     sync(spec, batch0, checkExisting = true)
 
@@ -102,14 +107,24 @@ final class SyncEngine(spark: SparkSession, root: String,
     * blind syncs get one attempt. */
   def sync(spec: PipeSpec, batch0: DataFrame, checkExisting: Boolean): SyncResult = {
     val pre = hooks.preSync(spec, batch0)
-    if (!checkExisting) {
-      val r0 = syncBlind(spec, pre)
-      hooks.postSync(spec, r0)
-      return r0
-    }
+    val r =
+      if (!checkExisting) syncBlind(spec, pre)
+      else if (spec.strategy.isDefined) withRetries(spec, pre)
+      else {
+        // a store that syncs where the data lives runs its own attempts
+        // (and mints under its own lease): no client retry loop or lease
+        val stamped = stamp(spec, pre)
+        syncRemote(spec, storage(spec), stamped, checkExisting = true)
+          .getOrElse(withRetries(spec, stamped))
+      }
+    hooks.postSync(spec, r)
+    r
+  }
+
+  private def withRetries(spec: PipeSpec, batch: DataFrame): SyncResult = {
     // retry leans on the diff pipeline's idempotence — which now includes
     // autoincrement minting: ids derive from the COMMITTED high-water mark
-    // (advanced only after the data write lands, see prepareBatch /
+    // (advanced only after the data write lands, see mint /
     // syncDefault), so a retried attempt re-reads the same base and
     // re-mints the SAME ids; rows persisted by a partial attempt dedupe in
     // the diff instead of re-inserting under fresh keys (reference
@@ -118,16 +133,14 @@ final class SyncEngine(spark: SparkSession, root: String,
     // batches so no other writer can advance the mark between attempts.
     def attemptLoop() = Retry.withBackoff(retries, retryBaseSleepMs) {
       spec.strategy match {
-        case Some(st) => st.sync(this, spec, pre)
-        case None     => syncDefault(spec, pre)
+        case Some(st) => st.sync(this, spec, batch)
+        case None     => syncDefault(spec, batch)
       }
     }
     val (result, attempts, errs) =
-      if (willMint(spec, pre)) withWriteLeaseOn(storage(spec))(attemptLoop())
+      if (willMint(spec, batch)) withWriteLeaseOn(storage(spec))(attemptLoop())
       else attemptLoop()
-    val r = result.copy(attempts = attempts, attemptErrors = errs)
-    hooks.postSync(spec, r)
-    r
+    result.copy(attempts = attempts, attemptErrors = errs)
   }
 
   /** Sync a REGISTERED pipe by keys: the spec comes from the catalog with
@@ -142,14 +155,18 @@ final class SyncEngine(spark: SparkSession, root: String,
     sync(spec, batch)
   }
 
-  /** Shared ingest preamble: dtype enforcement, autotime stamping, and
-    * autoincrement id assignment (steps 1-2b of the sync pipeline).
-    * Returns the prepared batch plus the PENDING high-water mark for
-    * minted ids — committed by the caller only after its data write
-    * lands, so a failed attempt leaves the mark untouched and a retry
-    * re-mints the same ids. */
-  private def prepareBatch(spec: PipeSpec, store: graft.storage.InstanceStore,
-                           batch0: DataFrame): (DataFrame, Option[Long]) = {
+  /** [[graft.storage.InstanceStore.syncRemote]] of a stamped batch; when
+    * the store ran the sync, the catalog records the schema it reports. */
+  private def syncRemote(spec: PipeSpec, store: graft.storage.InstanceStore,
+                         batch: DataFrame, checkExisting: Boolean): Option[SyncResult] =
+    store.syncRemote(batch, checkExisting).map { r =>
+      if (catalog.isDefined) persistDtypes(spec, targetSchema(store), inferSpecial(spec, batch))
+      r
+    }
+
+  /** Client-side ingest steps 1-2: dtype enforcement and autotime stamping
+    * with the engine's clock. Lazy: no job. */
+  private def stamp(spec: PipeSpec, batch0: DataFrame): DataFrame = {
     // 1. dtype enforcement (reference core/Pipe/_dtypes.py:19-115)
     var batch = if (spec.enforce) SchemaEvolution.enforceDtypes(batch0, spec.dtypes) else batch0
 
@@ -171,7 +188,17 @@ final class SyncEngine(spark: SparkSession, root: String,
         batch = batch.withColumn(dt, stamp)
       }
     }
+    batch
+  }
 
+  /** Step 2b of the ingest preamble, on a [[stamp]]ed batch: autoincrement
+    * id assignment. Returns the batch plus the PENDING high-water mark for
+    * minted ids — committed by the caller only after its data write
+    * lands, so a failed attempt leaves the mark untouched and a retry
+    * re-mints the same ids. */
+  private def mint(spec: PipeSpec, store: graft.storage.InstanceStore,
+                   stamped: DataFrame): (DataFrame, Option[Long]) = {
+    var batch = stamped
     // 2b. autoincrement surrogate primary key (reference
     //     core/Pipe/__init__.py:278-279 — DB identity): batches without the
     //     pk column get dense sequential ids via TWO-PASS per-partition
@@ -287,7 +314,9 @@ final class SyncEngine(spark: SparkSession, root: String,
     * come from parquet footer metadata). */
   def syncBlind(spec: PipeSpec, batch0: DataFrame): SyncResult = {
     val store = storage(spec)
-    mintScope(spec, store, batch0) { syncBlindBody(spec, store, batch0) }
+    val batch = stamp(spec, batch0)
+    syncRemote(spec, store, batch, checkExisting = false).getOrElse(
+      mintScope(spec, store, batch) { syncBlindBody(spec, store, batch) })
   }
 
   /** Blind-append MANY ready batches through ONE storage envelope — the
@@ -313,8 +342,8 @@ final class SyncEngine(spark: SparkSession, root: String,
   }
 
   private def syncBlindBody(spec: PipeSpec, store: graft.storage.InstanceStore,
-                            batch0: DataFrame): SyncResult = {
-    val (batch, pendingMaxId) = prepareBatch(spec, store, batch0)
+                            stamped: DataFrame): SyncResult = {
+    val (batch, pendingMaxId) = mint(spec, store, stamped)
     // data write then mark: the id high-water mark commits only after the
     // rows land, so a failed write leaves the mark at its old value
     def commitMark(): Unit = commitMintMark(store, pendingMaxId)
@@ -347,12 +376,14 @@ final class SyncEngine(spark: SparkSession, root: String,
 
   def syncDefault(spec: PipeSpec, batch0: DataFrame): SyncResult = {
     val store = storage(spec)
-    mintScope(spec, store, batch0) { syncDefaultBody(spec, store, batch0) }
+    val batch = stamp(spec, batch0)
+    syncRemote(spec, store, batch, checkExisting = true).getOrElse(
+      mintScope(spec, store, batch) { syncDefaultBody(spec, store, batch) })
   }
 
   private def syncDefaultBody(spec: PipeSpec, store: graft.storage.InstanceStore,
-                              batch0: DataFrame): SyncResult = {
-    val (batch, pendingMaxId) = prepareBatch(spec, store, batch0)
+                              stamped: DataFrame): SyncResult = {
+    val (batch, pendingMaxId) = mint(spec, store, stamped)
     // see syncBlind: the mark commits only after the data write lands
     def commitMark(): Unit = commitMintMark(store, pendingMaxId)
     // 2c: see [[inferSpecial]]

@@ -180,6 +180,81 @@ class ApiInstanceSpec extends SparkSpec {
     assert(st.rowCount == 5L, "a failed commit must not apply rows")
   }
 
+  /** Stages two rows under `wid`, one partition: a dead attempt 7 (one
+    * part, never sealed), then each of `sealedAttempts` staging the same
+    * rows and sealing them. */
+  private def stageAttempts(tq: String, wid: String, sealedAttempts: Seq[Int]): Unit = {
+    val base = TestPipeServer.server.url
+    val row = (id: Long) => s"""{"dt":"2024-02-0${id}T00:00:00.000000","id":$id,"val":$id.5}"""
+    val rows = Seq(row(4), row(5)).mkString("\n")
+    assert(http("POST", s"$base/pipes/stage?$tq&wid=$wid&pid=0&att=7&seq=0", rows)._1 == 200)
+    sealedAttempts.foreach { att =>
+      assert(http("POST", s"$base/pipes/stage?$tq&wid=$wid&pid=0&att=$att&seq=0", rows)._1 == 200)
+      assert(http("POST", s"$base/pipes/stage_done?$tq&wid=$wid&pid=0&att=$att&n=1")._1 == 200)
+    }
+  }
+
+  test("sync applies a duplicated task attempt exactly once") {
+    val root = tmpDir()
+    val st = new graft.storage.ApiStore(spark, TestPipeServer.server.url, root,
+      PipeSpec(PipeKeys("api", "sync_dup"),
+        columns = ColumnRoles(Map("datetime" -> "dt", "id" -> "id"))))
+    st.create(df3)
+    val tq = s"root=${enc(root)}&target=${enc(st.spec.targetName)}"
+    // a retried task (7 died) and a speculative duplicate (8 and 9 both
+    // sealed): a blind sync does not dedupe, so only the staging can
+    stageAttempts(tq, "sync-dup-1", Seq(8, 9))
+    val (code, body) = http("POST", s"${TestPipeServer.server.url}/pipes/sync?$tq" +
+      s"&wid=sync-dup-1&schema=${enc(df3.schema.toDDL)}&check=false")
+    assert(code == 200, body)
+    val out = graft.Session.mapper.readTree(body)
+    assert(out.get("inserted").asLong() == 2L && out.get("updated").asLong() == 0L, body)
+    assert(st.rowCount == 5L)
+    assert(!new java.io.File(TestPipeServer.server.stageDir.toFile, "sync-dup-1").exists)
+  }
+
+  test("sync with a partition that has no sealed attempt fails and applies nothing") {
+    val root = tmpDir()
+    val st = new graft.storage.ApiStore(spark, TestPipeServer.server.url, root,
+      PipeSpec(PipeKeys("api", "sync_unsealed"),
+        columns = ColumnRoles(Map("datetime" -> "dt", "id" -> "id"))))
+    st.create(df3)
+    def table = st.read.orderBy("id").collect().toSeq
+    val before = table
+    val tq = s"root=${enc(root)}&target=${enc(st.spec.targetName)}"
+    stageAttempts(tq, "sync-unsealed-1", Seq.empty)
+    val (code, msg) = http("POST", s"${TestPipeServer.server.url}/pipes/sync?$tq" +
+      s"&wid=sync-unsealed-1&schema=${enc(df3.schema.toDDL)}&check=true")
+    assert(code == 500 && msg.startsWith("java.lang.IllegalStateException") &&
+      msg.contains("no complete sealed attempt"), msg)
+    assert(st.rowCount == 3L)
+    assert(table == before)
+    assert(!new java.io.File(TestPipeServer.server.stageDir.toFile, "sync-unsealed-1").exists)
+  }
+
+  test("a sync over HTTP persists the same catalog dtypes as a local sync") {
+    import graft.types.MrsmType
+    def dtypes(storeFactory: Option[(org.apache.spark.sql.SparkSession, String, PipeSpec) =>
+        graft.storage.InstanceStore]): Map[String, MrsmType] = {
+      val cat = new graft.catalog.PipeCatalog()
+      val eng = storeFactory.map(f => new SyncEngine(spark, tmpDir(), catalog = Some(cat),
+        storeFactory = f)).getOrElse(new SyncEngine(spark, tmpDir(), catalog = Some(cat)))
+      val spec = PipeSpec(PipeKeys("api", "catalog_dtypes"),
+        columns = ColumnRoles(Map("datetime" -> "dt", "id" -> "id")))
+      def rows(v: org.apache.spark.sql.Column, day: Int) =
+        Seq((s"2024-01-0$day 00:00:00", day.toLong, s"""{"k":$day}""")).toDF("dts", "id", "doc")
+          .withColumn("dt", to_timestamp_ntz(col("dts"))).drop("dts").withColumn("val", v)
+      eng.sync(spec, rows(lit(10L), 1))
+      // int val promotes to numeric; a string column is added
+      eng.sync(spec, rows(lit(1.5), 2).withColumn("extra", lit("x")))
+      cat.get(spec.keys).get.dtypes
+    }
+    val remote = dtypes(Some(graft.storage.ApiStore.factory(TestPipeServer.server.url)))
+    assert(remote == dtypes(None))
+    assert(remote("doc") == MrsmType.MJson && remote("extra") == MrsmType.MStr)
+    assert(remote("val").isInstanceOf[MrsmType.MNumeric])
+  }
+
   test("client self-heals registration after a server restart") {
     val dir = java.nio.file.Files.createTempDirectory("graft-api-restart").toString
     val s1 = new graft.server.PipeServer(spark, dir)

@@ -56,4 +56,46 @@ class ProfileJobLogSpec extends SparkSpec {
       sc.removeSparkListener(log)
     }
   }
+
+  test("overlapping jobs count once: in-job ≤ wall, driver-gap ≥ 0") {
+    val sc = spark.sparkContext
+    ProfileJobLogGates.oneStage = new CountDownLatch(1)
+    ProfileJobLogGates.shuffle = new CountDownLatch(1)
+    val log = new Profile.JobLog
+    sc.addSparkListener(log)
+    def job(first: Boolean): Thread = {
+      val t = new Thread(() => {
+        sc.parallelize(1 to 4, 2).map { i =>
+          (if (first) ProfileJobLogGates.oneStage else ProfileJobLogGates.shuffle).await(); i
+        }.collect(); ()
+      })
+      t.start(); t
+    }
+    try {
+      val t0 = System.currentTimeMillis()
+      val a = job(first = true)
+      val b = job(first = false)
+      // both jobs open at once, held open together
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (log.jobs.size < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+      Thread.sleep(300)
+      ProfileJobLogGates.oneStage.countDown()
+      ProfileJobLogGates.shuffle.countDown()
+      a.join(); b.join()
+      GraftTestBus.waitUntilListenerBusEmpty(sc)
+      val wall = System.currentTimeMillis() - t0
+      val jobs = log.ordered
+      assert(jobs.size == 2, jobs)
+      val (inJob, gaps) = Profile.timeline(jobs)
+      // the sum of the job times counts the shared 300 ms twice
+      assert(jobs.map(j => j.end - j.start).sum > inJob, jobs)
+      assert(inJob <= wall, s"in-job $inJob ms > wall $wall ms: $jobs")
+      assert(wall - inJob >= 0)
+      assert(gaps.map(_._2) == Seq(0L, 0L), gaps)
+    } finally {
+      ProfileJobLogGates.oneStage.countDown()
+      ProfileJobLogGates.shuffle.countDown()
+      sc.removeSparkListener(log)
+    }
+  }
 }

@@ -2,24 +2,31 @@ package graft
 
 import java.time.LocalDateTime
 
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{ColumnRoles, PipeKeys, PipeSpec}
-import graft.sync.SyncEngine
+import graft.sync.{SyncEngine, SyncResult}
 
-/** Pins the Spark job count of a steady-state diff sync — a batch with
-  * both updates and inserts against an existing table — on the parquet
-  * store and on the HTTP instance (`ApiStore`, client side). Every job the
-  * sync starts counts: AQE query stages, broadcasts, the counts aggregate
-  * and the storage write. Jobs are attributed through a thread-local
-  * property, which Spark carries into its broadcast and query-stage
-  * threads, so only the sync's own jobs are counted. */
+/** Pins the cost of a steady-state diff sync — a batch with both updates
+  * and inserts against an existing table. The Spark job count is pinned
+  * on the parquet store and on the HTTP instance (`ApiStore`), client and
+  * server side; on parquet, so are the files and bytes a run of small
+  * syncs writes.
+  * Every job the sync starts counts: AQE query stages, broadcasts, the
+  * counts aggregate and the storage write. Jobs are attributed through a
+  * thread-local property, which Spark carries into its broadcast and
+  * query-stage threads, so only the sync's own jobs are counted; the
+  * server shares the session but runs on its own request threads, so its
+  * jobs are the untagged ones that start while the sync runs. */
 class SyncJobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
@@ -36,16 +43,21 @@ class SyncJobBudgetSpec extends SparkSpec {
       .withColumn("ts", col("ts").cast("timestamp_ntz"))
   }
 
-  /** Jobs `body` starts, each named by the description of the SQL
-    * execution that ran it. */
-  private def jobsOf[A](body: => A): (A, Seq[String]) = {
+  /** Jobs `body` starts on its own thread and the other jobs that start
+    * meanwhile, each named by the description of the SQL execution that
+    * ran it. */
+  private def jobsOf[A](body: => A): (A, Seq[String], Seq[String]) = {
     val token = java.util.UUID.randomUUID().toString
     val jobs  = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val others = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val execs = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Tag) == token))
-          jobs.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        val exec = String.valueOf(props.map(_.getProperty("spark.sql.execution.id")).orNull)
+        if (props.exists(_.getProperty(Tag) == token)) jobs.add(exec) else others.add(exec)
+        ()
+      }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart => execs.put(s.executionId.toString, s.description)
         case _ => ()
@@ -53,44 +65,94 @@ class SyncJobBudgetSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     spark.sparkContext.setLocalProperty(Tag, token)
+    def named(q: java.util.Queue[String]) =
+      q.asScala.toSeq.map(id => Option(execs.get(id)).getOrElse(s"execution $id"))
     try {
+      GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
       val a = body
       GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
-      (a, jobs.asScala.toSeq.map(id => Option(execs.get(id)).getOrElse(s"execution $id")))
+      (a, named(jobs), named(others))
     } finally {
       spark.sparkContext.setLocalProperty(Tag, null)
       spark.sparkContext.removeSparkListener(l)
     }
   }
 
-  /** The jobs of the third sync of a pipe: a create, a warming diff sync
-    * (it fills what steady state keeps warm, the schema caches), then the
-    * counted diff sync with 2000 inserts and 100 updates. */
-  private def steadyStateJobs(eng: SyncEngine, name: String): Seq[String] = {
+  /** The jobs of the third sync of a pipe — on the sync's thread and the
+    * others that ran meanwhile: a create, a warming diff sync (it fills
+    * what steady state keeps warm, the schema caches), then the counted
+    * diff sync with 2000 inserts and 100 updates. */
+  private def steadyStateJobs(eng: SyncEngine, name: String): (Seq[String], Seq[String]) = {
     val spec = PipeSpec(PipeKeys("budget", name),
       columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
     eng.sync(spec, events(0, 2000, _ => 0))
     eng.sync(spec, events(1800, 4000, n => if (n < 2000 && n % 2 == 0) 1 else 0))
-    val (r, jobs) = jobsOf(
+    val (r, jobs, others) = jobsOf(
       eng.sync(spec, events(3800, 6000, n => if (n < 4000 && n % 2 == 0) 1 else 0)))
     assert((r.inserted, r.updated) == ((2000L, 100L)))
-    jobs
+    (jobs, others)
   }
 
   private def describe(jobs: Seq[String]): String =
     jobs.groupBy(identity).map { case (d, js) => s"${js.size} × $d" }.mkString("; ")
 
   test("a parquet diff sync with updates and inserts runs at most 12 jobs") {
-    val jobs = steadyStateJobs(new SyncEngine(spark, tmpDir()), "events")
+    val (jobs, _) = steadyStateJobs(new SyncEngine(spark, tmpDir()), "events")
     assert(jobs.size <= 12, s"diff sync ran ${jobs.size} jobs: ${describe(jobs)}")
   }
 
-  /** Client-side jobs only: the server runs its store calls on its own
-    * request threads, which do not carry the sync's job property. */
-  test("an ApiStore diff sync with updates and inserts runs at most 13 client jobs") {
+  /** The client stages the batch (one job) and makes one call; the server
+    * runs the parquet engine's diff sync on the staged rows, under the
+    * parquet budget. */
+  test("an ApiStore diff sync runs at most 1 client job and 12 server jobs") {
     val eng = new SyncEngine(spark, tmpDir(),
       storeFactory = graft.storage.ApiStore.factory(TestPipeServer.server.url))
-    val jobs = steadyStateJobs(eng, "api_events")
-    assert(jobs.size <= 13, s"diff sync ran ${jobs.size} client jobs: ${describe(jobs)}")
+    val (jobs, server) = steadyStateJobs(eng, "api_events")
+    assert(jobs.size <= 1, s"diff sync ran ${jobs.size} client jobs: ${describe(jobs)}")
+    assert(server.size <= 12, s"diff sync ran ${server.size} server jobs: ${describe(server)}")
+  }
+
+  /** `body`'s result and the bytes its tasks wrote. */
+  private def written(body: => SyncResult): (SyncResult, Long) = {
+    val bytes = new AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.outputMetrics.bytesWritten))
+    }
+    GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
+      (r, bytes.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Each located write replaces the files holding its updated keys and
+    * adds its delta, sized to its bytes: one file for a 2k-row delta, not
+    * one per shuffle partition, each repeating its column dictionaries.
+    * All rows fall in one 30-day chunk. */
+  test("five 2k-row diff syncs add at most one file each and keep write_amp ≤ 2.1") {
+    val eng = new SyncEngine(spark, tmpDir())
+    val spec = PipeSpec(PipeKeys("budget", "layout"),
+      columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
+    eng.sync(spec, events(0, 2000, _ => 0))
+    val store = eng.storage(spec)
+    // each batch re-sends the previous one's last 10%, every other re-sent
+    // row changed (5% updates)
+    val runs = (1 to 5).map { b =>
+      val (lo, hi) = (b * 2000 - 200, (b + 1) * 2000)
+      val before = store.fileCount
+      val (r, bytes) = written(eng.sync(spec,
+        events(lo, hi, n => if (n < b * 2000 && n % 2 == 0) 1 else 0)))
+      assert((r.inserted, r.updated) == ((2000L, 100L)))
+      val added = store.fileCount - before
+      assert(added <= 1, s"sync $b added $added files")
+      (r.total, bytes)
+    }
+    assert(store.rowCount == 12000L)
+    val bytesPerRow = store.sizeBytes.toDouble / store.rowCount
+    val amp = runs.map(_._2).sum / (runs.map(_._1).sum * bytesPerRow)
+    assert(amp <= 2.1, s"write_amp $amp (${runs.map(_._2)} bytes)")
   }
 }

@@ -18,8 +18,11 @@ import graft.sync.{SyncEngine, SyncResult}
   * Valkey backends `read` fetches the whole table, so a steady-state diff
   * sync of a pipe with a dt axis must not call it. The engine's store
   * factory is wrapped in a dynamic proxy that counts every trait call the
-  * engine makes (calls a store makes on itself are not seen). */
-class SyncTargetReadSpec extends SparkSpec {
+  * engine makes (calls a store makes on itself are not seen). The HTTP
+  * instance runs the sync on its server: there the proxy wraps the
+  * server's store factory, and the client's engine may make no row read
+  * and exactly one `syncRemote` call per sync. */
+class SyncTargetReadSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   import spark.implicits._
 
   private type Factory = (SparkSession, String, PipeSpec) => InstanceStore
@@ -40,7 +43,14 @@ class SyncTargetReadSpec extends SparkSpec {
     }
 
   private def parquet: Factory = (s, r, sp) => new PipeStorage(s, r, sp)
-  private def api: Factory = ApiStore.factory(TestPipeServer.server.url)
+
+  /** Calls the HTTP instance's server makes on its stores. */
+  private val serverCalls = new ConcurrentHashMap[String, AtomicInteger]()
+  private lazy val server = new graft.server.PipeServer(spark,
+    java.nio.file.Files.createTempDirectory("graft-target-read").toString,
+    counting(parquet, serverCalls))
+  override def afterAll(): Unit = { server.stop(); super.afterAll() }
+  private def api: Factory = ApiStore.factory(server.url)
   private def valkey: Factory =
     ValkeyStore.factory(TestMiniValkey.server.host, TestMiniValkey.server.port)
 
@@ -65,18 +75,31 @@ class SyncTargetReadSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Row] =
     df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSeq.sortBy(_.toString)
 
+  private def snapshot(calls: ConcurrentHashMap[String, AtomicInteger]): Map[String, Int] =
+    calls.asScala.map { case (k, v) => k -> v.get }.toMap
+
   /** Sync `batches` through a fresh pipe; returns each sync's counts, the
-    * final table and the calls the engine made during the diff syncs. */
+    * final table, and the calls the engine made during the diff syncs and
+    * the calls the HTTP instance's server made in the same span. */
   private def run(base: Factory, spec: PipeSpec, batches: Seq[() => DataFrame])
-      : (Seq[(Long, Long)], Seq[Row], Map[String, Int]) = {
+      : (Seq[(Long, Long)], Seq[Row], Map[String, Int], Map[String, Int]) = {
     val calls = new ConcurrentHashMap[String, AtomicInteger]()
     val eng = new SyncEngine(spark, tmpDir(), storeFactory = counting(base, calls))
     val first = eng.sync(spec, batches.head())
     calls.clear()
+    serverCalls.clear()
     val rest = batches.tail.map(b => eng.sync(spec, b()))
-    val diffCalls = calls.asScala.map { case (k, v) => k -> v.get }.toMap
+    val (diffCalls, diffServerCalls) = (snapshot(calls), snapshot(serverCalls))
     val counts = (first +: rest).map((r: SyncResult) => (r.inserted, r.updated))
-    (counts, rows(eng.getData(spec)), diffCalls)
+    (counts, rows(eng.getData(spec)), diffCalls, diffServerCalls)
+  }
+
+  /** The client side of a sync over the HTTP instance: one `syncRemote`
+    * per sync and no row read. */
+  private def assertRemote(calls: Map[String, Int], syncs: Int): Unit = {
+    assert(calls.getOrElse("syncRemote", 0) == syncs, s"engine store calls: $calls")
+    assert(calls.getOrElse("read", 0) == 0, s"engine store calls: $calls")
+    assert(calls.getOrElse("readRange", 0) == 0, s"engine store calls: $calls")
   }
 
   private def spec(name: String, roles: Map[String, String]): PipeSpec =
@@ -87,8 +110,12 @@ class SyncTargetReadSpec extends SparkSpec {
   for ((backend, factory) <- Seq("ApiStore" -> (() => api), "ValkeyStore" -> (() => valkey)))
     test(s"a steady-state diff sync over $backend reads the schema, never the whole table") {
       val sp = spec(s"steady_${backend.toLowerCase}", withAxis)
-      val (counts, table, calls) = run(factory(), sp, Batches)
-      val (pCounts, pTable, _) = run(parquet, sp, Batches)
+      val (counts, table, clientCalls, serverSide) = run(factory(), sp, Batches)
+      val (pCounts, pTable, _, _) = run(parquet, sp, Batches)
+      val calls = if (backend == "ApiStore") {
+        assertRemote(clientCalls, syncs = 2)
+        serverSide
+      } else clientCalls
       assert(calls.getOrElse("read", 0) == 0, s"engine store calls: $calls")
       assert(calls.getOrElse("schemaDdl", 0) >= 2, s"engine store calls: $calls")
       assert(calls.getOrElse("readRange", 0) >= 2, s"engine store calls: $calls")
@@ -104,8 +131,9 @@ class SyncTargetReadSpec extends SparkSpec {
       () => events(0, 100, _ => 0), // user_id: int
       () => events(90, 200, n => if (n < 100) 1 else 0)
         .withColumn("user_id", col("user_id").cast("double") + 0.5))
-    val (counts, table, calls) = run(api, sp, promoting)
-    val (pCounts, pTable, _) = run(parquet, sp, promoting)
+    val (counts, table, clientCalls, calls) = run(api, sp, promoting)
+    val (pCounts, pTable, _, _) = run(parquet, sp, promoting)
+    assertRemote(clientCalls, syncs = 1)
     assert(counts == Seq((100L, 0L), (100L, 10L)))
     assert(counts == pCounts)
     assert(table == pTable)
@@ -119,8 +147,9 @@ class SyncTargetReadSpec extends SparkSpec {
   test("a pipe without a dt axis diffs against the whole table over ApiStore") {
     val sp = spec("no_axis", Map("primary" -> "event_id"))
     val noAxis = Batches.map(b => () => b().drop("ts"))
-    val (counts, table, calls) = run(api, sp, noAxis)
-    val (pCounts, pTable, _) = run(parquet, sp, noAxis)
+    val (counts, table, clientCalls, calls) = run(api, sp, noAxis)
+    val (pCounts, pTable, _, _) = run(parquet, sp, noAxis)
+    assertRemote(clientCalls, syncs = 2)
     assert(counts == Seq((400L, 0L), (400L, 20L), (400L, 20L)))
     assert(counts == pCounts)
     assert(table == pTable)
