@@ -322,8 +322,9 @@ object Bench {
     // CORRECTNESS DIGEST IN THE CAPTURED CHANNEL (r14 verdict item 1):
     // CORRECTNESS_r12-r14 were `{}` because the driver's correctness phase
     // never ran graft.Verify — but BENCH_r{N}.json's stdout tail IS
-    // committed every round. Verify (full runs) rewrites VERIFY_REPORT.json
-    // atomically per batch; the bench echoes its counts + age here so the
+    // committed every round. The committed VERIFY_REPORT.json is a full
+    // Verify run's digest (copied from its <outDir> when a round's record
+    // is made); the bench echoes its counts + age here so the
     // official round record carries correctness evidence either way. The
     // age field keeps the echo honest: a stale digest says so.
     val verifyDigest: String = {

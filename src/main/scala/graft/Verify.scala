@@ -37,7 +37,7 @@ object Verify {
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1)
       .getOrElse(math.max(1, math.min(6, cpus / 2)))
     val (okN, failN) = runAll(spark, sfDir, outDir, selected, k,
-      digestPath = if (subset.isEmpty) Some("VERIFY_REPORT.json") else None)
+      digestPath = if (subset.isEmpty) Some(s"$outDir/VERIFY_REPORT.json") else None)
     // Always exit 0: the per-query record (parquet present/absent) IS the
     // signal; a non-zero exit could make the driver discard the whole
     // partial report — the exact zeroing this rewrite exists to prevent.
@@ -135,11 +135,12 @@ object Verify {
       // were `{}` because the driver's compare phase never ran, so the
       // official record carried no correctness evidence at all. This
       // summary — counts + per-query failures only, atomically rewritten
-      // with report.json — is committed as VERIFY_REPORT.json and echoed
-      // into the bench stdout line the driver provably captures each round.
-      // FULL runs only: a SPARK_GRAFT_ONLY subset (or the concurrency
-      // spec's runAll call) must never clobber the committed full-suite
-      // digest with a partial one.
+      // with report.json under <outDir> — is copied over the committed
+      // VERIFY_REPORT.json when a round's record is made, and Bench echoes
+      // the committed copy into its stdout line. A local run leaves the
+      // committed copy alone. FULL runs only: a SPARK_GRAFT_ONLY subset
+      // (or the concurrency spec's runAll call) writes no digest, so a
+      // partial one can never be copied as the full-suite record.
       digestPath.foreach { path =>
         val fails = selected.keys.toSeq.sorted
           .flatMap(k => Option(errors.get(k)).map(e => s"${json(k)}: ${json(e)}"))

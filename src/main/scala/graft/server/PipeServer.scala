@@ -37,8 +37,10 @@ import graft.sync.SyncEngine
   *   - POST `stage?wid&pid&att&seq` (body: ND-JSON) → buffer one batch of
   *     one task attempt; POST `stage_done?wid&pid&att&n` seals the attempt
   *   - POST `commit?wid&mode&keys&stray…` → one store write of the staged
-  *     rows; POST `sync?wid&schema&check` → the server's `SyncEngine.sync`
-  *     of them into the store, answering the `SyncResult` and stored DDL.
+  *     rows; POST `sync?wid&schema&check&retries&retrySleepMs` → the
+  *     server's `SyncEngine.sync` of them into the store, with the client
+  *     engine's attempts and backoff (the engine defaults when absent),
+  *     answering the `SyncResult` and stored DDL.
   *     Both take one complete sealed attempt per partition (retry- and
   *     speculation-safe) and remove the staged parts either way
   *   - POST `clear?sql&lo…` | `dedup?keys&orderBy` | `maxid?v`
@@ -209,7 +211,11 @@ final class PipeServer(
       case ("POST", "sync") =>
         val (spec, st) = store(root, target)
         val r = withStaged(q("wid"), StructType.fromDDL(q("schema"))) { df =>
-          new SyncEngine(spark, rootDir(root), storeFactory = (_, _, _) => st)
+          new SyncEngine(spark, rootDir(root),
+            retries = q.get("retries").fold(SyncEngine.DefaultRetries)(_.toInt),
+            retryBaseSleepMs = q.get("retrySleepMs")
+              .fold(SyncEngine.DefaultRetryBaseSleepMs)(_.toLong),
+            storeFactory = (_, _, _) => st)
             .sync(spec, df, checkExisting = q("check").toBoolean)
         }
         respond(x, 200, graft.Session.mapper.writeValueAsString(Map(

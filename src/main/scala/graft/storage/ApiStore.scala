@@ -117,12 +117,16 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
 
   private def fetchDf(dataUrls: Seq[String]): DataFrame = {
     val schema = storedSchema
-    import spark.implicits._
-    // executor-side pulls (tasks fetch, not the driver) — one task per
-    // window URL so ranged reads stream k-way concurrently from the server
-    // — then an eager checkpoint for snapshot semantics (class doc)
-    val lines = spark.createDataset(dataUrls)
-      .repartition(dataUrls.size)
+    // executor-side pulls (tasks fetch, not the driver) — one partition
+    // per window URL, laid out without a shuffle job, so ranged reads
+    // stream k-way concurrently from the server — then an eager
+    // checkpoint for snapshot semantics (class doc). The fetch tasks take
+    // every task slot but one: a server sharing this Spark context (an
+    // in-process PipeServer) needs a slot for the jobs that answer them.
+    val slots = math.max(1,
+      math.min(dataUrls.size, spark.sparkContext.defaultParallelism - 1))
+    val lines = spark.createDataset(
+        spark.sparkContext.parallelize(dataUrls, slots))(Encoders.STRING)
       .flatMap(HttpFetch.lines(_))(Encoders.STRING)
     lines.select(from_json(col("value"), schema, jsonOptsJava).as("r"))
       .select("r.*").localCheckpoint(true)
@@ -308,14 +312,16 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     * per-partition, per-attempt upload above) and one `sync` call runs the
     * server's engine over its own store — the diff against the backtrack
     * window, the apply as one write, autoincrement minting under the
-    * server store's lease, and the attempts of the engine's retry loop.
-    * The stored schema comes back with the counts and refreshes the
-    * schema cache. */
-  override def syncRemote(batch: DataFrame, checkExisting: Boolean): Option[SyncResult] = {
+    * server store's lease, and the attempts of the engine's retry loop,
+    * as many and as spaced as the client engine's. The stored schema
+    * comes back with the counts and refreshes the schema cache. */
+  override def syncRemote(batch: DataFrame, checkExisting: Boolean, retries: Int,
+                          retryBaseSleepMs: Long): Option[SyncResult] = {
     val wid = java.util.UUID.randomUUID().toString
     stage(batch, wid)
     val out = graft.Session.mapper.readTree(call("POST", u("sync", "wid" -> wid,
-      "schema" -> batch.schema.toDDL, "check" -> checkExisting.toString)))
+      "schema" -> batch.schema.toDDL, "check" -> checkExisting.toString,
+      "retries" -> retries.toString, "retrySleepMs" -> retryBaseSleepMs.toString)))
     ApiStore.schemaCache.put(schemaKey, Some(out.get("schema").asText()))
     Some(SyncResult(out.get("inserted").asLong(), out.get("updated").asLong(),
       out.get("attempts").asInt(),

@@ -75,10 +75,13 @@ trait InstanceStore {
     * away ships the prepared batch once and the instance's own engine runs
     * the diff (or upsert, or blind append with `checkExisting = false`),
     * the apply and its retries. `batch` has had the client-side steps
-    * (pre-sync hook, dtype enforcement, autotime). Some(result) when the
-    * store ran the sync; the default None makes the engine run it locally
+    * (pre-sync hook, dtype enforcement, autotime). `retries` and
+    * `retryBaseSleepMs` are the calling engine's: the remote engine runs
+    * that many attempts with that backoff. Some(result) when the store
+    * ran the sync; the default None makes the engine run it locally
     * against this store's other methods. */
-  def syncRemote(batch: DataFrame, checkExisting: Boolean): Option[graft.sync.SyncResult] = None
+  def syncRemote(batch: DataFrame, checkExisting: Boolean, retries: Int,
+                 retryBaseSleepMs: Long): Option[graft.sync.SyncResult] = None
 
   /** Where a stored row lives, for stores that can rewrite single files:
     * an expression that evaluates, on any frame this store's `read` or

@@ -1,5 +1,7 @@
 package graft.storage
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -585,10 +587,12 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
   /** Bounded read with PARTITION-DIRECTORY pruning: the time bounds become a
     * chunk-label range predicate (calendar labels compare lexicographically;
     * epoch labels numerically), so a windowed read on a 100 TB pipe lists and
-    * scans only the chunk directories the window intersects — on top of the
-    * row-level bound predicate, which parquet min/max stats serve within the
-    * surviving files. `end` is exclusive unless `endInclusive`. Bounds are
-    * `LocalDateTime` (timestamp axis) or `Long` (epoch axis). */
+    * scans only the chunk directories the window intersects. Within those
+    * chunks the row-level bound is a filter over every row: syncs append
+    * files unsorted by the axis, so their row groups' min/max stats span
+    * most of the chunk and seldom skip one — a 1-day read of a monthly
+    * chunk scans the month. `end` is exclusive unless `endInclusive`.
+    * Bounds are `LocalDateTime` (timestamp axis) or `Long` (epoch axis). */
   override def readRange(begin: Option[Any], end: Option[Any],
                 endInclusive: Boolean = false): DataFrame = {
     val dt = dtCol.getOrElse {
@@ -1237,46 +1241,95 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
       .map(_.stripPrefix(s"$PartCol="))
       .filter(_ != "__HIVE_DEFAULT_PARTITION__")
 
-  /** The scan for the extreme of the datetime axis, pruned to the ONE
-    * extreme chunk directory: the label is monotone in dt by construction,
-    * so the global max/min lives in the max/min-label chunk. Labels
-    * compare numerically on epoch axes (string "10" sorts before "9") and
-    * lexicographically on the zero-padded calendar formats. Every sync
-    * reads this bookmark — on a 10-year pipe it must scan one chunk, not
-    * list 3650 of them.
-    */
-  private def extremeChunkScan(newest: Boolean): Option[DataFrame] = {
+  /** The chunk holding the extreme of the datetime axis: the label is
+    * monotone in dt by construction, so the global max/min lives in the
+    * max/min-label chunk. Labels compare numerically on epoch axes
+    * (string "10" sorts before "9") and lexicographically on the
+    * zero-padded calendar formats. Every sync reads this bookmark — on a
+    * 10-year pipe it must look at one chunk, not 3650 of them. */
+  private def extremeChunk(newest: Boolean): Option[String] = {
     val labels = diskChunkLabels
     if (labels.isEmpty) return None
     val ord: Ordering[String] =
       if (spec.epochUnit.isDefined) Ordering.by((s: String) => s.toLong)
       else Ordering.String
-    val pick = if (newest) labels.max(ord) else labels.min(ord)
-    Some(openData(Seq(dataPath), cacheable = true)
-      .where(col(PartCol) === pick))
+    Some(if (newest) labels.max(ord) else labels.min(ord))
+  }
+
+  /** The max (or min) of the axis over one chunk's files from their
+    * parquet footers: driver-side footer reads, no Spark job, like
+    * [[rowCount]]. Some(None) when the chunk holds no rows. None when the
+    * footers cannot answer and the caller must scan: more than 256 files
+    * (past that the scan amortizes its job), or a file whose axis column
+    * is not an INT64 of the expected kind — `TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false)` on a timestamp axis (so not an LTZ or a
+    * promoted axis), an unannotated or signed 64-bit integer on an epoch
+    * axis — or a row group with rows but no min/max statistics for it. */
+  private def footerExtreme(label: String, newest: Boolean): Option[Option[Long]] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation,
+      TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    val dt = dtCol.get
+    val dir = new Path(dataPath, chunkDirName(label))
+    val files = visibleFiles(dir)
+    if (files.size > 256) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    def axisIsInt64(t: org.apache.parquet.schema.Type): Boolean =
+      t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName == INT64 &&
+        ((spec.epochUnit, t.getLogicalTypeAnnotation) match {
+          case (None, ts: TimestampLogicalTypeAnnotation) =>
+            !ts.isAdjustedToUTC && ts.getUnit == TimeUnit.MICROS
+          case (Some(_), null) => true
+          case (Some(_), i: IntLogicalTypeAnnotation) => i.getBitWidth == 64 && i.isSigned
+          case _ => false
+        })
+    var extreme: Option[Long] = None
+    files.foreach { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(dir, f), conf))
+      try {
+        val schema = rd.getFooter.getFileMetaData.getSchema
+        if (!schema.containsField(dt) ||
+            !axisIsInt64(schema.getType(schema.getFieldIndex(dt)))) return None
+        rd.getRowGroups.asScala.filter(_.getRowCount > 0).foreach { rg =>
+          val st = rg.getColumns.asScala.find(_.getPath.toDotString == dt)
+            .map(_.getStatistics).orNull
+          if (st == null || !st.hasNonNullValue) return None
+          val v = (if (newest) st.genericGetMax else st.genericGetMin)
+            .asInstanceOf[java.lang.Long].longValue
+          extreme = Some(extreme.fold(v)(e => if (newest) e.max(v) else e.min(v)))
+        }
+      } finally rd.close()
+    }
+    Some(extreme)
   }
 
   /** Latest (or earliest) value of the datetime axis — the incremental
-    * bookmark (reference `get_sync_time`). */
-  override def syncTime(newest: Boolean = true): Option[java.time.LocalDateTime] = {
-    if (!exists) return None
-    val dt = dtCol.getOrElse(return None)
-    val agg = if (newest) max(col(dt)) else min(col(dt))
-    val scan = if (partitioned) extremeChunkScan(newest).getOrElse(return None)
-               else read
-    val row = scan.agg(agg.cast("timestamp_ntz").as("t")).head()
-    Option(row.getAs[java.time.LocalDateTime]("t"))
-  }
+    * bookmark (reference `get_sync_time`): the footer statistics of the
+    * extreme chunk's files ([[footerExtreme]]), else one scan of that
+    * chunk. */
+  override def syncTime(newest: Boolean = true): Option[java.time.LocalDateTime] =
+    axisExtreme(newest, "timestamp_ntz")(
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToLocalDateTime,
+      _.getAs[java.time.LocalDateTime](0))
 
   /** Sync-time bookmark for an integer-epoch axis (value in axis units). */
-  override def syncTimeEpoch(newest: Boolean = true): Option[Long] = {
+  override def syncTimeEpoch(newest: Boolean = true): Option[Long] =
+    axisExtreme(newest, "long")(identity, _.getLong(0))
+
+  /** The axis extreme from the footers, else from the extreme chunk's
+    * scan aggregate cast to `scanType`. */
+  private def axisExtreme[A](newest: Boolean, scanType: String)(
+      fromFooter: Long => A, fromScan: org.apache.spark.sql.Row => A): Option[A] = {
     if (!exists) return None
     val dt = dtCol.getOrElse(return None)
-    val agg = if (newest) max(col(dt)) else min(col(dt))
-    val scan = if (partitioned) extremeChunkScan(newest).getOrElse(return None)
-               else read
-    val row = scan.agg(agg.cast("long").as("t")).head()
-    if (row.isNullAt(0)) None else Some(row.getLong(0))
+    val pick = extremeChunk(newest).getOrElse(return None)
+    footerExtreme(pick, newest).map(_.map(fromFooter)).getOrElse {
+      val agg = if (newest) max(col(dt)) else min(col(dt))
+      val row = openData(Seq(dataPath), cacheable = true)
+        .where(col(PartCol) === pick).agg(agg.cast(scanType)).head()
+      if (row.isNullAt(0)) None else Some(fromScan(row))
+    }
   }
 }
 

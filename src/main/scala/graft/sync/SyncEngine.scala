@@ -70,8 +70,8 @@ final class SyncEngine(spark: SparkSession, root: String,
                        hooks: SyncHooks = SyncHooks(),
                        catalog: Option[graft.catalog.PipeCatalog] = None,
                        catalogPath: Option[String] = None,
-                       retries: Int = 3,
-                       retryBaseSleepMs: Long = 1000,
+                       retries: Int = SyncEngine.DefaultRetries,
+                       retryBaseSleepMs: Long = SyncEngine.DefaultRetryBaseSleepMs,
                        clock: () => LocalDateTime =
                          () => LocalDateTime.now(java.time.ZoneOffset.UTC),
                        /** the instance-connector seam: swap the pipe
@@ -159,7 +159,7 @@ final class SyncEngine(spark: SparkSession, root: String,
     * the store ran the sync, the catalog records the schema it reports. */
   private def syncRemote(spec: PipeSpec, store: graft.storage.InstanceStore,
                          batch: DataFrame, checkExisting: Boolean): Option[SyncResult] =
-    store.syncRemote(batch, checkExisting).map { r =>
+    store.syncRemote(batch, checkExisting, retries, retryBaseSleepMs).map { r =>
       if (catalog.isDefined) persistDtypes(spec, targetSchema(store), inferSpecial(spec, batch))
       r
     }
@@ -819,8 +819,6 @@ final class SyncEngine(spark: SparkSession, root: String,
       .map(_ - graft.dsl.EpochAxis.unitsForMinutes(unit, spec.backtrackMinutes))
   }
 
-  /** The read path: projection, half-open time bounds, params DSL, order,
-    * limit (reference core/Pipe/_data.py:22-318). */
   /** Translate a bound to the pipe's axis: a datetime bound on an
     * epoch-integer axis converts to axis units, the way the reference
     * accepts `--begin 2026-05-30` against an int axis
@@ -838,6 +836,12 @@ final class SyncEngine(spark: SparkSession, root: String,
         dtB
     }
 
+  /** The read path: projection, half-open time bounds, params DSL, order,
+    * limit (reference core/Pipe/_data.py:22-318). Rows come back ordered
+    * by the axis, then the sync keys (descending with `orderDesc`). With
+    * a `limit` the order and limit plan as one top-k job; without one, a
+    * small frame is sorted in one partition ([[onePartitionIfSmall]]) and
+    * a larger one by Spark's distributed sort. */
   def getData(
       spec: PipeSpec,
       select: Seq[String] = Seq.empty,
@@ -867,9 +871,35 @@ final class SyncEngine(spark: SparkSession, root: String,
       .filter(df.columns.contains)
     if (orderCols.nonEmpty) {
       val ordering = orderCols.map(c => if (orderDesc) col(c).desc else col(c).asc)
-      df = df.orderBy(ordering: _*)
+      // with a limit, orderBy plans one top-k job
+      val small = if (limit.isEmpty) onePartitionIfSmall(df) else None
+      df = small.map(_.sortWithinPartitions(ordering: _*)).getOrElse(df.orderBy(ordering: _*))
     }
     limit.map(df.limit).getOrElse(df)
+  }
+
+  /** `df` in one partition when it is small enough to sort in one task:
+    * a frame that already has one partition coalesces (no shuffle), one
+    * whose plan estimates at most AQE's `advisoryPartitionSizeInBytes`
+    * repartitions to one (its scan stays parallel). Sorting that one
+    * partition is the total order, so no range exchange is planned and no
+    * sampling job re-runs the scan and filter before the sort. None for
+    * larger frames, which keep the distributed sort: a path-based parquet
+    * relation estimates the whole table's bytes, so a 100 TB pipe stays
+    * distributed. */
+  private def onePartitionIfSmall(df: DataFrame): Option[DataFrame] = {
+    val qe = df.queryExecution
+    // an adaptive plan holds exchanges, which would run to report their
+    // partitions; any other plan builds its RDD without a job
+    val parts = qe.executedPlan match {
+      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => None
+      case p => Some(p.execute().getNumPartitions)
+    }
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (parts.contains(1)) Some(df.coalesce(1))
+    else if (qe.optimizedPlan.stats.sizeInBytes <= advisory) Some(df.repartition(1))
+    else None
   }
 
   /** Chunked read — the reference's `get_data(as_iterator=True)`
@@ -947,4 +977,10 @@ final class SyncEngine(spark: SparkSession, root: String,
     // directories), JDBC renders ONE bounded remote DELETE
     storage(spec).clearStructured(lo, hi, params)
   }
+}
+
+object SyncEngine {
+  /** Sync attempts and the backoff base of an engine built without them. */
+  val DefaultRetries = 3
+  val DefaultRetryBaseSleepMs = 1000L
 }

@@ -232,6 +232,39 @@ class ApiInstanceSpec extends SparkSpec {
     assert(!new java.io.File(TestPipeServer.server.stageDir.toFile, "sync-unsealed-1").exists)
   }
 
+  /** The server runs the client engine's attempts: against a store whose
+    * writes fail, a client with `retries = 1` makes exactly one attempt
+    * and one with `retries = 2` two (the server's default is 3). */
+  test("a remote sync runs the client engine's retries and backoff") {
+    import java.lang.reflect.{InvocationHandler, InvocationTargetException, Method, Proxy}
+    val creates = new java.util.concurrent.atomic.AtomicInteger
+    val failing: (org.apache.spark.sql.SparkSession, String, PipeSpec) =>
+        graft.storage.InstanceStore = (s, r, sp) => {
+      val inner = new graft.storage.PipeStorage(s, r, sp)
+      Proxy.newProxyInstance(classOf[graft.storage.InstanceStore].getClassLoader,
+        Array(classOf[graft.storage.InstanceStore]), new InvocationHandler {
+          def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+            if (m.getName == "create") {
+              creates.incrementAndGet()
+              throw new IllegalStateException("store write failed")
+            } else
+              try m.invoke(inner, (if (args == null) Array.empty[AnyRef] else args): _*)
+              catch { case e: InvocationTargetException => throw e.getCause }
+        }).asInstanceOf[graft.storage.InstanceStore]
+    }
+    val srv = new graft.server.PipeServer(spark, tmpDir(), failing)
+    try Seq(1, 2).foreach { retries =>
+      creates.set(0)
+      val eng = new SyncEngine(spark, tmpDir(), retries = retries, retryBaseSleepMs = 1,
+        storeFactory = graft.storage.ApiStore.factory(srv.url))
+      val spec = PipeSpec(PipeKeys("api", "sync_retries"),
+        columns = ColumnRoles(Map("datetime" -> "dt", "id" -> "id")))
+      val e = intercept[IllegalStateException](eng.sync(spec, df3))
+      assert(e.getMessage.contains("store write failed"), e.getMessage)
+      assert(creates.get == retries, s"retries = $retries made ${creates.get} attempts")
+    } finally srv.stop()
+  }
+
   test("a sync over HTTP persists the same catalog dtypes as a local sync") {
     import graft.types.MrsmType
     def dtypes(storeFactory: Option[(org.apache.spark.sql.SparkSession, String, PipeSpec) =>

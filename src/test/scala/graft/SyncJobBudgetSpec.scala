@@ -4,16 +4,13 @@ import java.time.LocalDateTime
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{ColumnRoles, PipeKeys, PipeSpec}
+import graft.JobCount.{describe, jobsOf}
 import graft.sync.{SyncEngine, SyncResult}
 
 /** Pins the cost of a steady-state diff sync — a batch with both updates
@@ -22,15 +19,11 @@ import graft.sync.{SyncEngine, SyncResult}
   * server side; on parquet, so are the files and bytes a run of small
   * syncs writes.
   * Every job the sync starts counts: AQE query stages, broadcasts, the
-  * counts aggregate and the storage write. Jobs are attributed through a
-  * thread-local property, which Spark carries into its broadcast and
-  * query-stage threads, so only the sync's own jobs are counted; the
-  * server shares the session but runs on its own request threads, so its
-  * jobs are the untagged ones that start while the sync runs. */
+  * counts aggregate and the storage write ([[JobCount]]); the server
+  * shares the session but runs on its own request threads, so its jobs
+  * are the others that start while the sync runs. */
 class SyncJobBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  private val Tag = "graft.test.budget"
 
   /** `event_id` n at minute n of March 2024; `version(n)` = 1 changes
     * the value. */
@@ -43,41 +36,6 @@ class SyncJobBudgetSpec extends SparkSpec {
       .withColumn("ts", col("ts").cast("timestamp_ntz"))
   }
 
-  /** Jobs `body` starts on its own thread and the other jobs that start
-    * meanwhile, each named by the description of the SQL execution that
-    * ran it. */
-  private def jobsOf[A](body: => A): (A, Seq[String], Seq[String]) = {
-    val token = java.util.UUID.randomUUID().toString
-    val jobs  = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val others = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val execs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        val exec = String.valueOf(props.map(_.getProperty("spark.sql.execution.id")).orNull)
-        if (props.exists(_.getProperty(Tag) == token)) jobs.add(exec) else others.add(exec)
-        ()
-      }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => execs.put(s.executionId.toString, s.description)
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setLocalProperty(Tag, token)
-    def named(q: java.util.Queue[String]) =
-      q.asScala.toSeq.map(id => Option(execs.get(id)).getOrElse(s"execution $id"))
-    try {
-      GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
-      val a = body
-      GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
-      (a, named(jobs), named(others))
-    } finally {
-      spark.sparkContext.setLocalProperty(Tag, null)
-      spark.sparkContext.removeSparkListener(l)
-    }
-  }
-
   /** The jobs of the third sync of a pipe — on the sync's thread and the
     * others that ran meanwhile: a create, a warming diff sync (it fills
     * what steady state keeps warm, the schema caches), then the counted
@@ -87,14 +45,11 @@ class SyncJobBudgetSpec extends SparkSpec {
       columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
     eng.sync(spec, events(0, 2000, _ => 0))
     eng.sync(spec, events(1800, 4000, n => if (n < 2000 && n % 2 == 0) 1 else 0))
-    val (r, jobs, others) = jobsOf(
+    val (r, jobs, others) = jobsOf(spark)(
       eng.sync(spec, events(3800, 6000, n => if (n < 4000 && n % 2 == 0) 1 else 0)))
     assert((r.inserted, r.updated) == ((2000L, 100L)))
     (jobs, others)
   }
-
-  private def describe(jobs: Seq[String]): String =
-    jobs.groupBy(identity).map { case (d, js) => s"${js.size} × $d" }.mkString("; ")
 
   test("a parquet diff sync with updates and inserts runs at most 12 jobs") {
     val (jobs, _) = steadyStateJobs(new SyncEngine(spark, tmpDir()), "events")
