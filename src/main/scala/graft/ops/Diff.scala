@@ -120,30 +120,13 @@ object Diff {
   def tagExisting(incoming: DataFrame, backtrack: DataFrame, keys: Seq[String],
                   nullSafe: Boolean = false,
                   flag: String = "__graft_update",
-                  salt: Int = 1,
                   location: Option[String] = None): DataFrame = {
-    val delta0 = filterUnseen(backtrack, incoming)
-    // salt > 1 spreads a hot key over `salt` reducer partitions (pipes can
-    // opt in via extras.skew_salt): the backtrack key set replicates salt×
-    // — it is bounded by the sync window, so replication is the cheap side
-    // — and each delta row joins exactly one replica. AQE's skew handling
-    // only rebalances sort-merge joins; this covers the hash-join path too.
-    val delta = if (salt > 1)
-      delta0.withColumn("__graft_salt", floor(rand(42) * salt).cast("int"))
-    else delta0
-    val bt0 = location.map(bkKeysLocated(backtrack, keys, _)).getOrElse(bkKeys(backtrack, keys))
+    val delta = filterUnseen(backtrack, incoming)
+    val bt = location.map(bkKeysLocated(backtrack, keys, _)).getOrElse(bkKeys(backtrack, keys))
       .withColumn("__graft_seen", lit(1))
-    val bt = if (salt > 1)
-      bt0.withColumn("__graft_bk_salt",
-        explode(sequence(lit(0), lit(salt - 1)).cast("array<int>")))
-    else bt0
-    val base = keyCondition(delta, bt, keys, nullSafe)
-    val cond = if (salt > 1)
-      base && delta("__graft_salt") === bt("__graft_bk_salt")
-    else base
-    val j = delta.join(bt, cond, "left")
-    j.select((delta0.columns.map(c => delta(c)).toIndexedSeq :+
-      bt("__graft_seen").isNotNull.as(flag)) ++ location.map(l => bt(l).as(l)): _*)
+    delta.join(bt, keyCondition(delta, bt, keys, nullSafe), "left")
+      .select((delta.columns.map(c => delta(c)).toIndexedSeq :+
+        bt("__graft_seen").isNotNull.as(flag)) ++ location.map(l => bt(l).as(l)): _*)
   }
 
   /** One-shot: diff incoming against the backtrack window and split.

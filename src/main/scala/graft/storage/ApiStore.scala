@@ -115,18 +115,15 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
   private def storedSchema: StructType =
     StructType.fromDDL(schemaDdl.getOrElse(call("GET", u("schema"))))
 
-  private def fetchDf(dataUrls: Seq[String]): DataFrame = {
+  /** The rows one data route answers: one executor task pulls them (the
+    * driver does not), without a shuffle job, then an eager checkpoint
+    * gives snapshot semantics (class doc). The one fetch task holds one
+    * task slot while a server sharing this Spark context (an in-process
+    * PipeServer) answers it with jobs of its own. */
+  private def fetchDf(dataUrl: String): DataFrame = {
     val schema = storedSchema
-    // executor-side pulls (tasks fetch, not the driver) — one partition
-    // per window URL, laid out without a shuffle job, so ranged reads
-    // stream k-way concurrently from the server — then an eager
-    // checkpoint for snapshot semantics (class doc). The fetch tasks take
-    // every task slot but one: a server sharing this Spark context (an
-    // in-process PipeServer) needs a slot for the jobs that answer them.
-    val slots = math.max(1,
-      math.min(dataUrls.size, spark.sparkContext.defaultParallelism - 1))
     val lines = spark.createDataset(
-        spark.sparkContext.parallelize(dataUrls, slots))(Encoders.STRING)
+        spark.sparkContext.parallelize(Seq(dataUrl), 1))(Encoders.STRING)
       .flatMap(HttpFetch.lines(_))(Encoders.STRING)
     lines.select(from_json(col("value"), schema, jsonOptsJava).as("r"))
       .select("r.*").localCheckpoint(true)
@@ -141,71 +138,10 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     u("data", (bq ++ eq :+ ("endIncl" -> endInclusive.toString)): _*)
   }
 
-  /** Split a ranged read into `ApiStore.fetchParallelism` half-open windows
-    * along the datetime axis (the final window carries the caller's end
-    * bound and inclusivity, so the union is EXACTLY the requested range).
-    * Missing bounds resolve from the server's sync-time bookmarks; the axis
-    * kind (timestamp vs integer epoch) comes from the cached schema DDL —
-    * probing values would misread an epoch axis as seconds. Returns None
-    * (caller falls back to one URL) for axis-less pipes, empty pipes,
-    * non-splittable dtypes, or a collapsed range. */
-  private def windowUrls(begin: Option[Any], end: Option[Any],
-                         endInclusive: Boolean): Option[Seq[String]] = {
-    import org.apache.spark.sql.types._
-    val k = ApiStore.fetchParallelism
-    if (k <= 1) return None
-    val dt = dtCol.getOrElse(return None)
-    val ddl = schemaDdl.getOrElse(return None)
-    val field = StructType.fromDDL(ddl).fields.find(_.name == dt)
-      .getOrElse(return None)
-    def toMicros(v: Any): Option[Long] = v match {
-      case d: LocalDateTime => Some(d.toEpochSecond(java.time.ZoneOffset.UTC)
-        * 1000000L + d.getNano / 1000L)
-      case t: java.sql.Timestamp => toMicros(t.toLocalDateTime)
-      case n: Long => Some(n)
-      case n: Int  => Some(n.toLong)
-      case _       => None
-    }
-    val isTs = field.dataType match {
-      case TimestampType | TimestampNTZType => true
-      case LongType | IntegerType           => false
-      case _                                => return None
-    }
-    def bookmark(newest: Boolean): Option[Any] = {
-      val s = call("GET", u("sync_time", "newest" -> newest.toString,
-        "epoch" -> (!isTs).toString))
-      if (s.isEmpty) None
-      else if (isTs) Some(LocalDateTime.parse(s)) else Some(s.toLong)
-    }
-    def fromMicros(us: Long): Any =
-      if (isTs) LocalDateTime.ofEpochSecond(us / 1000000L,
-        (us % 1000000L).toInt * 1000, java.time.ZoneOffset.UTC)
-      else us
-    val lo = toMicros(begin.orElse(bookmark(newest = false)).getOrElse(return None))
-      .getOrElse(return None)
-    val hiBound = end.orElse(bookmark(newest = true)).getOrElse(return None)
-    val hi = toMicros(hiBound).getOrElse(return None)
-    if (hi <= lo) return None // single-point or empty range: one URL is right
-    // k boundaries, integer interpolation: lo = b0 < b1 < … < b_{k} where
-    // the last window's end is the CALLER's bound (inclusive when the
-    // caller's was, or when it came from the newest bookmark)
-    val cuts = (1 until k).map(i => lo + (hi - lo) * i / k).distinct
-      .filter(c => c > lo && c < hi)
-    val bounds = (lo +: cuts) :+ hi
-    val lastIncl = end.isEmpty || endInclusive
-    Some(bounds.sliding(2).toSeq.zipWithIndex.map { case (Seq(a, b), i) =>
-      val isLast = i == bounds.size - 2
-      rangeUrl(Some(fromMicros(a)),
-        if (isLast) Some(hiBound) else Some(fromMicros(b)),
-        endInclusive = isLast && lastIncl)
-    })
-  }
-
   override def read: DataFrame = {
     if (!exists) throw new IllegalArgumentException(
       s"pipe $target does not exist")
-    fetchDf(windowUrls(None, None, endInclusive = false)
-      .getOrElse(Seq(u("data"))))
+    fetchDf(u("data"))
   }
 
   override def readRange(begin: Option[Any], end: Option[Any],
@@ -217,8 +153,7 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     }
     if (!exists) throw new IllegalArgumentException(
       s"pipe $target does not exist")
-    fetchDf(windowUrls(begin, end, endInclusive)
-      .getOrElse(Seq(rangeUrl(begin, end, endInclusive))))
+    fetchDf(rangeUrl(begin, end, endInclusive))
   }
 
   override def readIn(values: Seq[Any]): DataFrame = {
@@ -231,7 +166,7 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
     val enc0 = values.map(encodeAny)
     val kinds = enc0.map(_._1).distinct
     require(kinds.size == 1, s"mixed value kinds in readIn: $kinds")
-    fetchDf(Seq(u("in", "values" -> enc0.map(_._2).mkString(","), "kind" -> kinds.head)))
+    fetchDf(u("in", "values" -> enc0.map(_._2).mkString(","), "kind" -> kinds.head))
   }
 
   override def rowCount: Long = call("GET", u("count")).toLong
@@ -270,7 +205,7 @@ final class ApiStore(spark: SparkSession, baseUrl: String, root: String,
       .select(to_json(struct(cols.map(col).toIndexedSeq: _*), jsonOptsJava).as("j"))
       .select("j").as(Encoders.STRING)
     val streams = math.max(1,
-      math.min(ApiStore.uploadParallelism, jsonDs.rdd.getNumPartitions))
+      math.min(ApiStore.UploadParallelism, jsonDs.rdd.getNumPartitions))
     jsonDs.coalesce(streams)
       .foreachPartition { (it: Iterator[String]) =>
         val tc  = org.apache.spark.TaskContext.get()
@@ -440,19 +375,11 @@ object ApiStore {
     override def initialValue() = scala.collection.mutable.Set.empty[String]
   }
 
+  /** Concurrent staged-upload streams per patch (executor-side POSTs). */
+  private val UploadParallelism = 8
+
   /** Spec registration is idempotent server-side; cache by value so the
     * common handle-per-op pattern costs one POST per distinct spec. */
-  /** Windows per ranged read (and executor tasks per fetch). DEFAULT OFF
-    * (1): engine-issued reads on this path are patch-scale by construction
-    * (class doc), and splitting a 10k-row read into 8 ranged requests was
-    * measured ~40% SLOWER against the in-process server — per-request
-    * planning dominates. Raise it for BULK reads against a remote server
-    * fleet, where per-stream bandwidth is the bottleneck instead. */
-  @volatile private[graft] var fetchParallelism: Int = 1
-
-  /** Concurrent staged-upload streams per patch (executor-side POSTs). */
-  @volatile private[graft] var uploadParallelism: Int = 8
-
   private val registered =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), PipeSpec]
 

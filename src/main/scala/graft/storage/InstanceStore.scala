@@ -18,8 +18,9 @@ import graft.catalog.PipeSpec
   *   - `readRange` end bound is EXCLUSIVE unless `endInclusive`; a bounded
   *     read on a pipe without a datetime axis must throw, not return the
   *     full table.
-  *   - `create`/`overwrite`/`append`/`upsert` must leave `read` reflecting
-  *     the change when they return (no async visibility).
+  *   - `create`/`overwrite`/`append`/`upsert`/`applyDelta` must leave
+  *     `read` reflecting the change when they return (no async
+  *     visibility).
   *   - `clear` keeps rows whose predicate evaluates NULL (SQL DELETE
   *     three-valued logic).
   *   - `syncTime`/`syncTimeEpoch` are the newest/oldest axis value.
@@ -51,26 +52,6 @@ trait InstanceStore {
              knownChunks: Option[Seq[String]] = None,
              strayScan: StrayScan = StrayScan.Full): Unit
 
-  /** Apply one diff: `delta` holds its update and insert rows, told apart
-    * by the boolean column `updateFlag` (true = the row's key is stored
-    * and the row replaces it). Default: two calls — the update half merges
-    * chunk-scoped, the insert half appends (an append never pays a
-    * merge). Either half may be empty (callers skip all-empty calls).
-    *
-    * `located` is the set of [[rowLocation]] values of the rows the
-    * updates replace, as the diff found them in the backtrack slice. A
-    * store that supplies locations rewrites exactly those files in one
-    * write; the default ignores it (it is only ever set for stores whose
-    * `rowLocation` is defined). */
-  def applyDelta(delta: DataFrame, updateFlag: String, keys: Seq[String],
-                 knownChunks: Option[Seq[String]] = None,
-                 strayScan: StrayScan = StrayScan.Full,
-                 located: Option[Seq[String]] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    upsert(delta.where(col(updateFlag)).drop(updateFlag), keys, knownChunks, strayScan)
-    append(delta.where(!col(updateFlag)).drop(updateFlag))
-  }
-
   /** Run the whole sync of `batch` where the data lives: a store a network
     * away ships the prepared batch once and the instance's own engine runs
     * the diff (or upsert, or blind append with `checkExisting = false`),
@@ -90,6 +71,19 @@ trait InstanceStore {
     * hands the update rows' files to [[applyDelta]]. None for stores
     * without files. */
   def rowLocation: Option[Column] = None
+
+  /** Apply one diff in ONE write, on a store with a [[rowLocation]]:
+    * `delta` holds its update and insert rows, told apart by the boolean
+    * column `updateFlag` (true = the row's key is stored and the row
+    * replaces it), and `located` the `rowLocation` values of the rows the
+    * updates replace, as the diff found them in the backtrack slice. The
+    * store rewrites exactly those files. The engine calls it only for
+    * diffs with updates on stores with row locations; every other apply
+    * is its own split into [[upsert]] and [[append]]. */
+  def applyDelta(delta: DataFrame, updateFlag: String, keys: Seq[String],
+                 located: Seq[String]): Unit =
+    throw new UnsupportedOperationException(
+      s"${getClass.getSimpleName} has no row locations to apply a delta at")
 
   // ── deletion / maintenance ───────────────────────────────────────────
   def clear(predicate: Column, boundLo: Option[Any] = None,

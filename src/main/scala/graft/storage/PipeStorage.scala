@@ -36,10 +36,10 @@ object StrayScan {
   *     files — the Spark equivalent of the reference bounding its
   *     UPDATE/MERGE join by the patch's MIN(dt)..MAX(dt)
   *     (meerschaum/utils/sql.py:1920-1933). Callers without locations
-  *     (native-upsert mode, the HTTP server's delta commit, clear,
-  *     deduplicate) rewrite every file of the chunks they touch. At
-  *     100 TB a day's late data rewrites a few files, not the table; reads
-  *     prune partitions from the same column.
+  *     (native-upsert mode, clear, deduplicate) rewrite every file of the
+  *     chunks they touch; create, overwrite and compact replace every
+  *     file. At 100 TB a day's late data rewrites a few files, not the
+  *     table; reads prune partitions from the same column.
   *
   *   - **versioned snapshot** (no dt axis): each write lands in a fresh
   *     `seg_<n>/` segment and a `_CURRENT` pointer flips to a manifest
@@ -255,9 +255,11 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
   }
 
   // ── crash-safe file swaps ──────────────────────────────────────────────
-  // Every partitioned rewrite (upsert, diff apply, clear, deduplicate)
-  // reads a known set of data FILES, writes their surviving rows plus any
-  // new rows ONCE into a tmp dir, then swaps at file level. The INTENT
+  // Every partitioned write but append (create, overwrite, compact,
+  // upsert, diff apply, clear, deduplicate) reads a known set of data
+  // FILES — every file for create, overwrite and compact, none for a
+  // fresh create — writes their surviving rows plus any new rows ONCE
+  // into a tmp dir, then swaps at file level. The INTENT
   // file — written only after the tmp output is complete — names the tmp
   // and lists every step: "A <chunk>/<file>" (move this tmp file into
   // data/) and "D <chunk>/<file>" (delete this replaced live file).
@@ -267,10 +269,14 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
   // A chunk dir left with no files is removed. The intent deletes FIRST
   // during cleanup: once every step ran the swap is final, and recovery
   // must become a no-op before any cleanup starts. Files of a chunk that
-  // the rewrite did not read stay untouched. Intents written by earlier
-  // releases carry dir-level tags ("R <chunk>": replace the dir with the
-  // tmp part, "C <chunk>": clear it) or bare dir names (the backup-dir
-  // protocol); the same parser rolls those forward.
+  // the rewrite did not read stay untouched. Readers are not isolated
+  // from a swap: between the first A and the last D a scan sees both the
+  // added and the replaced files. Intents written by earlier releases
+  // carry dir-level tags ("R <chunk>": replace the dir with the tmp
+  // part, "C <chunk>": clear it) or bare dir names (the backup-dir
+  // protocol); the same parser rolls those forward, and a whole-dir
+  // `.data_tmp.ready`/`.compact_tmp.ready` left by their create,
+  // overwrite or compact rolls forward on open ([[ensureRecovered]]).
   private def swapIntent = new Path(s"$basePath/.swap_intent")
   private def swapBackup = new Path(s"$basePath/.swap_backup")
 
@@ -294,19 +300,23 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
       visibleFiles(new Path(dataPath, dir)).map(f => s"$dir/$f")
     }
 
+  /** Data files of every chunk dir under `dir` (data/ or a tmp dir), as
+    * "chunk/file" names relative to it. */
+  private def chunkedFiles(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartCol="))
+      .flatMap(d => visibleFiles(d.getPath).map(f => s"${d.getPath.getName}/$f"))
+
+  /** Every data file of the table (see [[chunkedFiles]]). */
+  private def allDataFiles: Seq[String] = chunkedFiles(new Path(dataPath))
+
   /** Write `content` (rows with the chunk column) into `tmpName`, then swap
     * it in for the data files `replaced` — the one rewrite primitive. */
   private def rewrite(content: DataFrame, replaced: Seq[String], tmpName: String): Unit = {
     val tmp = new Path(s"$basePath/$tmpName")
     content.write.mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(tmp.toString)
-    val added =
-      if (!fs.exists(tmp)) Seq.empty
-      else fs.listStatus(tmp).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$PartCol="))
-        .flatMap { d =>
-          val dir = d.getPath.getName
-          visibleFiles(d.getPath).map(f => s"$dir/$f")
-        }
+    val added = chunkedFiles(tmp)
     val out = fs.create(swapIntent, true)
     try out.write((tmpName +: (added.map("A " + _) ++ replaced.map("D " + _)))
       .mkString("\n").getBytes("UTF-8"))
@@ -316,9 +326,12 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     fs.delete(tmp, true)
   }
 
-  /** The A/D steps of a file swap (see above); idempotent. */
+  /** The A/D steps of a file swap (see above); idempotent. data/ exists
+    * afterwards even when nothing moved: a create of no rows leaves an
+    * existing, empty table. */
   private def rollForward(tmp: Path, added: Seq[String], deleted: Seq[String]): Unit = {
     val dataDir = new Path(dataPath)
+    fs.mkdirs(dataDir)
     added.foreach { rel =>
       val part = new Path(tmp, rel)
       if (fs.exists(part)) {
@@ -415,9 +428,9 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
             .exists(t => fs.exists(new Path(s"$basePath/$t"))))
       if (needsRecovery) withWriteLease {
         recoverSwap() // re-checks the intent under the lease
-        // whole-dir swap recovery (write/compact): the tmp is complete
-        // before the live dir is touched, so a missing live dir rolls
-        // forward from whichever full-state dir survived
+        // whole-dir swap of earlier releases (create/overwrite/compact):
+        // the `.ready` tmp was complete before the live dir was touched,
+        // so a missing live dir rolls forward from whichever survived
         val dataDir = new Path(dataPath)
         Seq(".data_tmp", ".compact_tmp").foreach { t =>
           val tmp = new Path(s"$basePath/$t.ready")
@@ -667,43 +680,26 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     * chunks cannot shard badly, and skipping the shuffle is the win there.
     */
   override def create(df: DataFrame, cluster: Boolean = true): Unit =
-    withWriteLease { write(df, firstVersion = true, cluster) }
+    withWriteLease { write(df, cluster) }
 
   /** Full-table rewrites (schema promotion) always cluster: table-wide
     * row volume is exactly the sharding case. */
   override def overwrite(df: DataFrame): Unit =
-    withWriteLease { write(df, firstVersion = false, cluster = true) }
+    withWriteLease { write(df, cluster = true) }
 
-  private def write(df: DataFrame, firstVersion: Boolean, cluster: Boolean): Unit = {
-    writeBody(df, firstVersion, cluster)
-    // AFTER the data lands: a failed promotion rewrite must not leave a
-    // cache entry whose types disagree with the (recovered) old files
-    recordWrittenSchema(df.schema, replace = true)
-  }
-
-  private def writeBody(df: DataFrame, firstVersion: Boolean, cluster: Boolean): Unit = {
+  private def write(df: DataFrame, cluster: Boolean): Unit = {
     if (partitioned) {
-      // Write to a temp dir first, then swap: the incoming plan may lazily
-      // read the files being replaced (e.g. a schema-evolution rewrite), and
-      // an in-place overwrite would delete them mid-scan.
-      val dataDir = new Path(s"$basePath/data")
-      val tmp     = new Path(s"$basePath/.data_tmp")
+      // the file swap writes the tmp dir before any live file moves: the
+      // incoming plan may lazily read the files it replaces (a
+      // schema-evolution rewrite), and an in-place overwrite would delete
+      // them mid-scan
       val chunked = withChunk(df)
       val laidOut =
         if (cluster)
           chunked.repartitionByRange(col(PartCol), col(dtCol.get))
             .sortWithinPartitions(col(PartCol), col(dtCol.get))
         else chunked
-      laidOut.write.mode(SaveMode.Overwrite)
-        .partitionBy(PartCol).parquet(tmp.toString)
-      // mark the tmp complete (atomic rename) BEFORE touching the live dir:
-      // a crash after the delete leaves the `.ready` dir as the sole copy,
-      // and ensureRecovered() rolls it forward on the next open
-      val ready = new Path(s"$tmp.ready")
-      if (fs.exists(ready)) fs.delete(ready, true)
-      fs.rename(tmp, ready)
-      if (fs.exists(dataDir)) fs.delete(dataDir, true)
-      fs.rename(ready, dataDir)
+      rewrite(laidOut, allDataFiles, ".data_tmp")
     } else {
       val v   = readPtr.getOrElse(-1) + 1
       val seg = s"seg_$v"
@@ -711,6 +707,9 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
       writeManifest(v, Seq(seg))
       writePtr(v); gcOldSnapshots(keep = 2)
     }
+    // AFTER the data lands: a failed promotion rewrite must not leave a
+    // cache entry whose types disagree with the (recovered) old files
+    recordWrittenSchema(df.schema, replace = true)
   }
 
   override def append(df: DataFrame): Unit = { withWriteLease {
@@ -853,28 +852,22 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     * reference's dt-bounded UPDATE/MERGE (utils/sql.py:1920-1933). A
     * located file that vanished since the diff (a concurrent compact, a
     * manual delete) fails the apply loudly before anything is written;
-    * the engine's retry then re-diffs against the current files. Without
-    * locations: upsert, then append. */
+    * the engine's retry then re-diffs against the current files. */
   override def applyDelta(delta: DataFrame, updateFlag: String, keys: Seq[String],
-                          knownChunks: Option[Seq[String]] = None,
-                          strayScan: StrayScan = StrayScan.Full,
-                          located: Option[Seq[String]] = None): Unit =
-    located match {
-      case Some(locs) if partitioned => withWriteLease {
-        require(keys.nonEmpty, "applyDelta requires key columns")
-        val rows = sized(delta.drop(updateFlag))
-        if (!exists) { create(rows); return }
-        val fpBefore = schemaFingerprint()
-        val files = locatedFiles(locs)
-        // no distinct on the key side: an anti join's result does not
-        // depend on build-side duplicates, and the engine's materialized
-        // delta broadcasts as it is
-        merge(readFiles(files), files,
-          delta.where(col(updateFlag)).select(keys.map(col): _*), withChunk(rows), keys)
-        recordWrittenSchema(rows.schema, replace = false, fpBefore)
-      }
-      case _ => super.applyDelta(delta, updateFlag, keys, knownChunks, strayScan, located)
-    }
+                          located: Seq[String]): Unit = withWriteLease {
+    require(partitioned, "applyDelta needs the time-partitioned layout")
+    require(keys.nonEmpty, "applyDelta requires key columns")
+    val rows = sized(delta.drop(updateFlag))
+    if (!exists) { create(rows); return }
+    val fpBefore = schemaFingerprint()
+    val files = locatedFiles(located)
+    // no distinct on the key side: an anti join's result does not
+    // depend on build-side duplicates, and the engine's materialized
+    // delta broadcasts as it is
+    merge(readFiles(files), files,
+      delta.where(col(updateFlag)).select(keys.map(col): _*), withChunk(rows), keys)
+    recordWrittenSchema(rows.schema, replace = false, fpBefore)
+  }
 
   /** `df` narrowed without a shuffle to one partition per AQE
     * `coalescePartitions.minPartitionSize` of its size estimate — for the
@@ -1093,24 +1086,14 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
     * file compaction: parquet is already columnar+compressed, so the win at
     * scale is coalescing the many small files incremental syncs leave behind
     * into one file per time chunk (`repartition` on the partition column
-    * hashes each chunk into a single writer task). Atomic tmp+swap like all
-    * other rewrites. */
+    * hashes each chunk into a single writer task). The same file swap as
+    * every other rewrite. */
   override def compact(): Unit = { withWriteLease {
     if (!exists) return
-    if (partitioned) {
-      val df  = openData(Seq(s"$basePath/data"), cacheable = true)
-      val tmp = new Path(s"$basePath/.compact_tmp")
-      df.repartition(col(PartCol))
-        .write.mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(tmp.toString)
-      val dataDir = new Path(s"$basePath/data")
-      val ready = new Path(s"$tmp.ready")
-      if (fs.exists(ready)) fs.delete(ready, true)
-      fs.rename(tmp, ready) // completeness marker — see write()
-      fs.delete(dataDir, true)
-      fs.rename(ready, dataDir)
-    } else {
-      overwrite(read.coalesce(1))
-    }
+    if (partitioned)
+      rewrite(openData(Seq(dataPath), cacheable = true).repartition(col(PartCol)),
+        allDataFiles, ".compact_tmp")
+    else overwrite(read.coalesce(1))
   }
   }
 
@@ -1145,7 +1128,8 @@ final class PipeStorage(spark: SparkSession, root: String, val spec: PipeSpec)
 
   /** Remove crash leftovers and superseded snapshots — the reference's
     * `vacuum` (core/Pipe/_maintenance.py:1-161). Any in-flight swap is
-    * COMPLETED first ([[recoverSwap]] / the `.ready` roll-forward), so the
+    * COMPLETED first ([[recoverSwap]] / the `.ready` roll-forward of
+    * earlier releases), so the
     * leftovers deleted here are guaranteed to be superseded copies, never
     * the sole survivor of an interrupted rewrite. */
   override def vacuum(): Unit = withWriteLease {

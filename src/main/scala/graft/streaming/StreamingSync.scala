@@ -13,7 +13,8 @@ import graft.sync.{SyncEngine, SyncResult}
   * `pipe.sync()`: meerschaum/jobs/_Job.py:69+, utils/schedule.py:75-270).
   *
   * Each micro-batch flows through the exact same batch sync pipeline
-  * (enforce → evolve → diff → unseen/update → chunk-scoped upsert), so
+  * (enforce → evolve → diff → unseen/update → one located write, or
+  * upsert + append on stores without row locations), so
   * re-delivered rows are idempotent by construction — the reference's
   * "diff-then-apply makes redelivery safe" property
   * (meerschaum/core/Pipe/_sync.py:40-531) carries over verbatim. The sink is

@@ -22,7 +22,14 @@ import graft.storage.{PipeStorage, StrayScan}
   *   full-row delta (anti-join on canonical hash) →
   *   unseen/update split on sync keys →
   *   apply: ONE write rewriting only the files that hold updated keys
-  *   (stores with row locations), else append unseen + upsert update
+  *   (stores with row locations), else upsert the updates and append
+  *   the inserts
+  *
+  * One body runs every mode: a blind sync (`checkExisting = false`)
+  * skips the backtrack and the diff and appends, upsert mode skips the
+  * diff and upserts the whole batch, and the default diffs. The engine
+  * owns the update/insert split; a store only sees upsert, append and,
+  * with row locations, the located one-write apply.
   *
   * The backtrack slice is bounded by the batch's own MIN/MAX dt ±1 minute —
   * the reference's heuristic (core/Pipe/_sync.py:860-896) — so the diff join
@@ -107,40 +114,55 @@ final class SyncEngine(spark: SparkSession, root: String,
     * blind syncs get one attempt. */
   def sync(spec: PipeSpec, batch0: DataFrame, checkExisting: Boolean): SyncResult = {
     val pre = hooks.preSync(spec, batch0)
-    val r =
-      if (!checkExisting) syncBlind(spec, pre)
-      else if (spec.strategy.isDefined) withRetries(spec, pre)
-      else {
-        // a store that syncs where the data lives runs its own attempts
-        // (and mints under its own lease): no client retry loop or lease
-        val stamped = stamp(spec, pre)
-        syncRemote(spec, storage(spec), stamped, checkExisting = true)
-          .getOrElse(withRetries(spec, stamped))
-      }
+    val r = spec.strategy.filter(_ => checkExisting) match {
+      case Some(st) => withRetries(spec, pre, retries)(st.sync(this, spec, pre))
+      case None => syncStamped(spec, pre, checkExisting, if (checkExisting) retries else 1)
+    }
     hooks.postSync(spec, r)
     r
   }
 
-  private def withRetries(spec: PipeSpec, batch: DataFrame): SyncResult = {
-    // retry leans on the diff pipeline's idempotence — which now includes
-    // autoincrement minting: ids derive from the COMMITTED high-water mark
-    // (advanced only after the data write lands, see mint /
-    // syncDefault), so a retried attempt re-reads the same base and
-    // re-mints the SAME ids; rows persisted by a partial attempt dedupe in
-    // the diff instead of re-inserting under fresh keys (reference
-    // semantics: target-generated keys, connectors/sql/_pipes.py:1639-1800).
-    // The writer lease is held across the WHOLE retry loop for minting
-    // batches so no other writer can advance the mark between attempts.
-    def attemptLoop() = Retry.withBackoff(retries, retryBaseSleepMs) {
-      spec.strategy match {
-        case Some(st) => st.sync(this, spec, batch)
-        case None     => syncDefault(spec, batch)
-      }
-    }
-    val (result, attempts, errs) =
-      if (willMint(spec, batch)) withWriteLeaseOn(storage(spec))(attemptLoop())
-      else attemptLoop()
-    result.copy(attempts = attempts, attemptErrors = errs)
+  /** `attempt` run up to `attempts` times. Retry leans on the diff
+    * pipeline's idempotence — which includes autoincrement minting: ids
+    * derive from the COMMITTED high-water mark (advanced only after the
+    * data write lands, see [[mint]]), so a retried attempt re-reads the
+    * same base and re-mints the SAME ids; rows persisted by a partial
+    * attempt dedupe in the diff instead of re-inserting under fresh keys
+    * (reference semantics: target-generated keys,
+    * connectors/sql/_pipes.py:1639-1800). A blind append gives that
+    * idempotence up, so it gets one attempt. The writer lease is held
+    * across the WHOLE loop for minting batches, so no other writer can
+    * advance the mark between attempts: concurrent minters see disjoint
+    * bases and a retry re-reads a stable one (all lease impls are
+    * re-entrant per (thread, pipe)).
+    *
+    * Tradeoff, documented: concurrent minting syncs of ONE pipe serialize
+    * for the sync's full duration (not only the short mint window), so a
+    * second minter blocks up to the lease acquire timeout and then fails
+    * LOUDLY. That is the intended semantics — the alternative
+    * (overlapping attempt windows) re-mints ids another writer just
+    * advanced past and silently corrupts — and matches the engine's
+    * one-writer-per-pipe lease philosophy. Concurrent minting writers
+    * should target different pipes. */
+  private def withRetries(spec: PipeSpec, batch: DataFrame, attempts: Int)(
+      attempt: => SyncResult): SyncResult = {
+    def loop() = Retry.withBackoff(attempts, retryBaseSleepMs)(attempt)
+    val willMint = spec.autoincrement &&
+      spec.columns.primary.exists(pk => !batch.columns.contains(pk))
+    val (result, n, errs) = if (willMint) storage(spec).withWriteLease(loop()) else loop()
+    result.copy(attempts = n, attemptErrors = errs)
+  }
+
+  /** Dtypes and autotime, then the sync where the data lives when the
+    * store runs it remotely (it runs its own attempts and mints under its
+    * own lease), else [[syncBody]] in `attempts` attempts, each on its
+    * own store handle: a swap an attempt left half done is rolled forward
+    * before the next one writes. */
+  private def syncStamped(spec: PipeSpec, batch0: DataFrame, checkExisting: Boolean,
+                          attempts: Int): SyncResult = {
+    val stamped = stamp(spec, batch0)
+    syncRemote(spec, storage(spec), stamped, checkExisting).getOrElse(
+      withRetries(spec, stamped, attempts)(syncBody(spec, storage(spec), stamped, checkExisting)))
   }
 
   /** Sync a REGISTERED pipe by keys: the spec comes from the catalog with
@@ -208,15 +230,15 @@ final class SyncEngine(spark: SparkSession, root: String,
     //     the same non-promise a DB identity column makes.
     var pendingMaxId: Option[Long] = None
     spec.columns.primary.foreach { pk =>
-      if (spec.autoincrement && !batch.columns.contains(pk)) withWriteLeaseOn(store) {
+      if (spec.autoincrement && !batch.columns.contains(pk)) store.withWriteLease {
         // base from the COMMITTED high-water marker (one metadata read),
         // falling back to a table scan only for pre-marker pipes; ids are
         // not time-aligned, so no chunk pruning could bound that scan. The
         // marker is NOT advanced here: the caller commits pendingMaxId
         // after its data write lands, so a failed attempt re-reads the
         // same base and re-mints the SAME ids (retry-idempotent). The
-        // writer lease spans the whole minting sync (see sync()), keeping
-        // concurrent minters' bases disjoint.
+        // writer lease spans the whole minting sync (see withRetries),
+        // keeping concurrent minters' bases disjoint.
         val base = store.readMaxId.getOrElse {
           if (store.exists) {
             val r = store.read.agg(max(col(pk).cast("long"))).head()
@@ -238,33 +260,6 @@ final class SyncEngine(spark: SparkSession, root: String,
     }
     (batch, pendingMaxId)
   }
-
-  private def withWriteLeaseOn[A](store: graft.storage.InstanceStore)(body: => A): A =
-    store.withWriteLease(body)
-
-  /** Will this batch receive minted autoincrement ids? Minting syncs hold
-    * the writer lease from base-read to mark-commit (all lease impls are
-    * re-entrant per (thread, pipe)), so concurrent minters see disjoint
-    * bases and a retry re-reads a stable one. */
-  private def willMint(spec: PipeSpec, batch: DataFrame): Boolean =
-    spec.autoincrement &&
-      spec.columns.primary.exists(pk => !batch.columns.contains(pk))
-
-  /** Lease scope for the mint→write→mark sequence when `batch` mints ids;
-    * no-op otherwise. Applied INSIDE syncBlind/syncDefault too (not just
-    * sync()) so direct calls keep the disjoint-base guarantee.
-    *
-    * Tradeoff, documented: concurrent minting syncs of ONE pipe now
-    * serialize for the sync's full duration (previously only the short
-    * mint window), so a second minter blocks up to the lease acquire
-    * timeout and then fails LOUDLY. That is the intended semantics — the
-    * alternative (overlapping attempt windows) re-mints ids another writer
-    * just advanced past and silently corrupts — and matches the engine's
-    * one-writer-per-pipe lease philosophy. Concurrent minting writers
-    * should target different pipes. */
-  private def mintScope[A](spec: PipeSpec, store: graft.storage.InstanceStore,
-                           batch: DataFrame)(body: => A): A =
-    if (willMint(spec, batch)) withWriteLeaseOn(store)(body) else body
 
   /** Commit the minted high-water mark AFTER the data write landed. A
     * metadata write this small failing is rare but consequential — a stale
@@ -306,25 +301,12 @@ final class SyncEngine(spark: SparkSession, root: String,
       SpecialCols.infer(batch, declared)
     }
 
-  /** Blind insert — the reference's `check_existing=False`
-    * (core/Pipe/_sync.py:54,93): the ingest preamble and schema evolution
-    * still apply, but the backtrack read and diff are skipped entirely and
-    * the batch appends as-is, duplicates included. The append-only fast
-    * path: O(batch) writes, zero data reads of the existing table (counts
-    * come from parquet footer metadata). */
-  def syncBlind(spec: PipeSpec, batch0: DataFrame): SyncResult = {
-    val store = storage(spec)
-    val batch = stamp(spec, batch0)
-    syncRemote(spec, store, batch, checkExisting = false).getOrElse(
-      mintScope(spec, store, batch) { syncBlindBody(spec, store, batch) })
-  }
-
   /** Blind-append MANY ready batches through ONE storage envelope — the
     * multi-batch form of `sync(check_existing=False)` (the reference's
     * chunked sync loops the same insert path per chunk batch,
     * core/Pipe/_sync.py:54,93). Blind appends are row-additive and
-    * order-independent, so the stored rows equal a sequential
-    * `syncBlind` per batch; what changes is the COST: the fixed
+    * order-independent, so the stored rows equal a sequential blind
+    * sync per batch; what changes is the COST: the fixed
     * job-ladder overhead (exists/schema/append/bookkeeping, ~1.3 s
     * measured per envelope regardless of batch size) is paid once
     * instead of `batches.size` times — the same ONE-job move that fixed
@@ -341,51 +323,22 @@ final class SyncEngine(spark: SparkSession, root: String,
       checkExisting = false)
   }
 
-  private def syncBlindBody(spec: PipeSpec, store: graft.storage.InstanceStore,
-                            stamped: DataFrame): SyncResult = {
-    val (batch, pendingMaxId) = mint(spec, store, stamped)
-    // data write then mark: the id high-water mark commits only after the
-    // rows land, so a failed write leaves the mark at its old value
-    def commitMark(): Unit = commitMintMark(store, pendingMaxId)
-    lazy val inferred = inferSpecial(spec, batch)
-    if (!store.exists) {
-      val env = batchEnvelope(spec, batch)
-      store.create(batch, cluster = chunkSpan(spec, env) >= 4)
-      val n = store.rowCount
-      persistDtypes(spec, batch.schema, inferred)
-      commitMark()
-      return SyncResult(inserted = n, updated = 0)
-    }
-    val pre       = store.rowCount
-    val tgtSchema = targetSchema(store)
-    val aligned =
-      if (spec.static) SchemaEvolution.conform(batch, tgtSchema)
-      else {
-        val u = SchemaEvolution.unifiedSchema(tgtSchema, batch.schema, spec.mixedNumerics)
-        val promoted = tgtSchema.fields.exists(f =>
-          u.find(_.name == f.name).exists(_.dataType != f.dataType))
-        if (promoted) store.overwrite(SchemaEvolution.conform(store.read, u))
-        if (promoted || u.length != tgtSchema.length || inferred.nonEmpty)
-          persistDtypes(spec, u, inferred)
-        SchemaEvolution.conform(batch, u)
-      }
-    store.append(aligned)
-    commitMark()
-    SyncResult(inserted = store.rowCount - pre, updated = 0)
-  }
+  /** The standard pipeline, as a [[SyncStrategy]] delegates to it: one
+    * attempt, the strategy's caller runs the retries. */
+  def syncDefault(spec: PipeSpec, batch0: DataFrame): SyncResult =
+    syncStamped(spec, batch0, checkExisting = true, attempts = 1)
 
-  def syncDefault(spec: PipeSpec, batch0: DataFrame): SyncResult = {
-    val store = storage(spec)
-    val batch = stamp(spec, batch0)
-    syncRemote(spec, store, batch, checkExisting = true).getOrElse(
-      mintScope(spec, store, batch) { syncDefaultBody(spec, store, batch) })
-  }
-
-  private def syncDefaultBody(spec: PipeSpec, store: graft.storage.InstanceStore,
-                              stamped: DataFrame): SyncResult = {
+  /** One attempt of a local sync, in any mode. `checkExisting = false` is
+    * the reference's blind insert (`check_existing=False`,
+    * core/Pipe/_sync.py:54,93): the ingest preamble and schema evolution
+    * still apply, but the backtrack read and the diff are skipped and the
+    * batch appends as-is, duplicates included — O(batch) writes, zero
+    * data reads of the existing table (counts come from parquet footer
+    * metadata). Upsert mode skips the diff and upserts every batch row;
+    * the default diffs and applies updates and inserts. */
+  private def syncBody(spec: PipeSpec, store: graft.storage.InstanceStore,
+                       stamped: DataFrame, checkExisting: Boolean): SyncResult = {
     val (batch, pendingMaxId) = mint(spec, store, stamped)
-    // see syncBlind: the mark commits only after the data write lands
-    def commitMark(): Unit = commitMintMark(store, pendingMaxId)
     // 2c: see [[inferSpecial]]
     lazy val inferredSpecial: Map[String, graft.types.MrsmType] =
       inferSpecial(spec, batch)
@@ -395,91 +348,91 @@ final class SyncEngine(spark: SparkSession, root: String,
     //    table (a filterless parquet count is row-metadata cheap) — caching
     //    a create batch just to count it would spill a table's worth of
     //    rows at 100 TB.
-    if (!store.exists) {
-      val deduped = dedupeBatch(spec, batch)
+    val result = if (!store.exists) {
+      val created = if (checkExisting) dedupeBatch(spec, batch) else batch
       // cluster the write only when the batch spans enough chunks to shard
       // (tasks × chunks files): a day's batch into 1-2 chunks skips the
       // shuffle, a multi-year backfill pays one shuffle instead of a
       // files-per-task-per-chunk explosion
-      val env = batchEnvelope(spec, deduped)
-      store.create(deduped, cluster = chunkSpan(spec, env) >= 4)
+      store.create(created, cluster = chunkSpan(spec, batchEnvelope(spec, created)) >= 4)
       val n = store.rowCount
-      persistDtypes(spec, deduped.schema, inferredSpecial)
-      commitMark()
-      return SyncResult(inserted = n, updated = 0)
+      persistDtypes(spec, created.schema, inferredSpecial)
+      SyncResult(inserted = n, updated = 0)
+    } else {
+      // 4. schema evolution (unless static). Added columns cost NOTHING
+      //    here: reads use mergeSchema, so old files simply surface typed
+      //    nulls. Only a TYPE PROMOTION (e.g. int val + float batch ->
+      //    numeric) rewrites the table, because parquet cannot merge
+      //    conflicting physical types. At 100 TB an added column is a
+      //    metadata event, not a rewrite. Evolution needs only the
+      //    target's SCHEMA; the target's rows are read only by a promotion
+      //    rewrite and by the backtrack of a batch without an envelope
+      //    (see backtrackSlice) — on the HTTP and KV backends `read`
+      //    fetches the whole table.
+      val tgtSchema = targetSchema(store)
+      val alignedSchema =
+        if (spec.static) tgtSchema
+        else {
+          val u = SchemaEvolution.unifiedSchema(tgtSchema, batch.schema, spec.mixedNumerics)
+          val promoted = tgtSchema.fields.exists(f =>
+            u.find(_.name == f.name).exists(_.dataType != f.dataType))
+          if (promoted) store.overwrite(SchemaEvolution.conform(store.read, u)) // tmp+swap write
+          if (promoted || u.length != tgtSchema.length || inferredSpecial.nonEmpty)
+            persistDtypes(spec, u, inferredSpecial)
+          u
+        }
+      val batchAligned = SchemaEvolution.conform(batch, alignedSchema)
+      if (!checkExisting) {
+        val pre = store.rowCount
+        store.append(batchAligned)
+        SyncResult(inserted = store.rowCount - pre, updated = 0)
+      } else diffAndApply(spec, store, alignedSchema, batchAligned)
     }
+    // data write then mark: the id high-water mark commits only after the
+    // rows land, so a failed write leaves the mark at its old value
+    commitMintMark(store, pendingMaxId)
+    result
+  }
 
-    // 4. schema evolution (unless static). Added columns cost NOTHING here:
-    //    reads use mergeSchema, so old files simply surface typed nulls. Only
-    //    a TYPE PROMOTION (e.g. int val + float batch -> numeric) rewrites the
-    //    table, because parquet cannot merge conflicting physical types. At
-    //    100 TB an added column is a metadata event, not a rewrite.
-    //    Evolution needs only the target's SCHEMA; the target's rows are
-    //    read only by a promotion rewrite and by the backtrack of a batch
-    //    without an envelope (see backtrackSlice) — on the HTTP and KV
-    //    backends `read` fetches the whole table.
-    val tgtSchema = targetSchema(store)
-    val alignedSchema =
-      if (spec.static) tgtSchema
-      else {
-        val u = SchemaEvolution.unifiedSchema(tgtSchema, batch.schema, spec.mixedNumerics)
-        val promoted = tgtSchema.fields.exists(f =>
-          u.find(_.name == f.name).exists(_.dataType != f.dataType))
-        if (promoted) {
-          store.overwrite(SchemaEvolution.conform(store.read, u)) // tmp+swap write
-          persistDtypes(spec, u, inferredSpecial)
-        } else if (u.length != tgtSchema.length || inferredSpecial.nonEmpty)
-          persistDtypes(spec, u, inferredSpecial)
-        u
-      }
-    val batchAligned = SchemaEvolution.conform(batch, alignedSchema)
-
-    val keys = syncKeys(spec, batchAligned)
+  /** Steps 5-6 on an existing target: tag the batch against the backtrack
+    * window, count, apply. One cached plan feeds one aggregate (insert and
+    * update counts, affected chunks, located files) and the storage
+    * write. */
+  private def diffAndApply(spec: PipeSpec, store: graft.storage.InstanceStore,
+                           schema: StructType, batch: DataFrame): SyncResult = {
+    val keys = syncKeys(spec, batch)
     // the batch's axis envelope, computed ONCE: bounds both the backtrack
     // slice (the diff window) and the stray-chunk guard in storage
-    val envelope = batchEnvelope(spec, batchAligned)
-
-    // 5. upsert mode skips the diff entirely (reference sync_pipe:1921-1935).
-    //    One cached plan feeds one aggregate (insert/update counts + affected
-    //    chunks) and the storage merge — 2 jobs, not 4. Native upsert
-    //    applies arbitrary rows, so the dt-move guard must scan the full
-    //    key columns (StrayScan.Full — documented cost of the guarantee).
-    if (spec.upsert) {
-      val patch = tagAgainstTarget(spec, store,
-        backtrackSlice(store, alignedSchema, envelope),
-        dedupeBatch(spec, batchAligned), keys, diff = false).cache()
-      try {
-        val (nIns, nUpd, chunks, _) = countsAndChunks(store, patch, allRows = true)
-        store.upsert(patch.drop(UpdFlag), keys, chunks, StrayScan.Full)
-        commitMark()
-        SyncResult(nIns, nUpd)
-      } finally patch.unpersist()
-    } else {
-      // 6. diff-then-apply: delta rows tagged update/insert by ONE left join;
-      //    counts + affected chunks come from ONE aggregate over the cached
-      //    delta. A store with row locations gets the update rows' files
-      //    from that same aggregate and lands both halves in one write that
-      //    rewrites only those files. Otherwise updates merge chunk-scoped
-      //    and inserts append; update rows were DETECTED inside the
-      //    backtrack window, so their old chunks are provably within it —
-      //    the stray guard prunes to that window instead of scanning the
-      //    table.
-      val tagged = tagAgainstTarget(spec, store,
-        backtrackSlice(store, alignedSchema, envelope),
-        dedupeBatch(spec, batchAligned), keys, diff = true).cache()
-      try {
-        val (nIns, nUpd, chunks, located) = countsAndChunks(store, tagged, allRows = false)
-        val stray = envelope.map { case (lo, hi) => StrayScan.Bounded(lo, hi): StrayScan }
-          .getOrElse(StrayScan.Full)
+    val envelope = batchEnvelope(spec, batch)
+    // 5. upsert mode skips the diff (reference sync_pipe:1921-1935): every
+    //    row is tagged, and the whole batch upserts. Native upsert applies
+    //    arbitrary rows, so the dt-move guard must scan the full key
+    //    columns (StrayScan.Full — documented cost of the guarantee).
+    // 6. diff mode: delta rows tagged update/insert by ONE left join. A
+    //    store with row locations gets the update rows' files from the
+    //    aggregate and lands both halves in one write that rewrites only
+    //    those files. Otherwise updates merge chunk-scoped and inserts
+    //    append; update rows were DETECTED inside the backtrack window, so
+    //    their old chunks are provably within it — the stray guard prunes
+    //    to that window instead of scanning the table.
+    val tagged = tagAgainstTarget(spec, store, backtrackSlice(store, schema, envelope),
+      dedupeBatch(spec, batch), keys, diff = !spec.upsert).cache()
+    try {
+      val (nIns, nUpd, chunks, located) = countsAndChunks(store, tagged, allRows = spec.upsert)
+      if (spec.upsert) store.upsert(tagged.drop(UpdFlag), keys, chunks, StrayScan.Full)
+      else {
         val delta = tagged.drop(LocCol)
-        if (nUpd > 0 && (nIns > 0 || located.isDefined))
-          store.applyDelta(delta, UpdFlag, keys, chunks, stray, located)
-        else if (nUpd > 0) store.upsert(delta.where(col(UpdFlag)).drop(UpdFlag), keys, chunks, stray)
-        else if (nIns > 0) store.append(delta.where(!col(UpdFlag)).drop(UpdFlag))
-        commitMark()
-        SyncResult(nIns, nUpd)
-      } finally tagged.unpersist()
-    }
+        located.filter(_ => nUpd > 0) match {
+          case Some(files) => store.applyDelta(delta, UpdFlag, keys, files)
+          case None =>
+            val stray = envelope.map { case (lo, hi) => StrayScan.Bounded(lo, hi): StrayScan }
+              .getOrElse(StrayScan.Full)
+            if (nUpd > 0) store.upsert(delta.where(col(UpdFlag)).drop(UpdFlag), keys, chunks, stray)
+            if (nIns > 0) store.append(delta.where(!col(UpdFlag)).drop(UpdFlag))
+        }
+      }
+      SyncResult(nIns, nUpd)
+    } finally tagged.unpersist()
   }
 
   private val UpdFlag = "__graft_update"
@@ -525,19 +478,11 @@ final class SyncEngine(spark: SparkSession, root: String,
   private def tagAgainstTarget(spec: PipeSpec, store: graft.storage.InstanceStore,
                                backtrack: DataFrame, batch: DataFrame, keys: Seq[String],
                                diff: Boolean): DataFrame = {
-    // hot-key pipes opt into a salted diff join (extras.skew_salt = N):
-    // the deterministic form of skew mitigation for the hash-join path
-    // AQE's sort-merge-only skew handling can't reach
-    val salt = spec.extras.get("skew_salt").map { s =>
-      require(s.matches("[0-9]+") && s.toInt >= 1,
-        s"extras.skew_salt must be a positive integer, got '$s'")
-      s.toInt
-    }.getOrElse(1)
     if (diff) {
       val location = store.rowLocation
       Diff.tagExisting(batch,
         location.map(backtrack.withColumn(LocCol, _)).getOrElse(backtrack),
-        keys, spec.nullIndices, UpdFlag, salt, location.map(_ => LocCol))
+        keys, spec.nullIndices, UpdFlag, location.map(_ => LocCol))
     } else {
       // backtrack keys aliased before the join — batch and backtrack can
       // share lineage (see Diff's bkKeys rationale)

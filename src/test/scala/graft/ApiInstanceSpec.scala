@@ -48,7 +48,7 @@ class ApiInstanceSpec extends SparkSpec {
       dtypes = Map("v" -> graft.types.Dtypes.parse("float")),
       upsert = true, nullIndices = true, backtrackMinutes = 7,
       epochUnit = Some("second"), tags = Seq("t1", "t2"),
-      extras = Map("skew_salt" -> "8"))
+      extras = Map("owner" -> "ops"))
     val json = graft.server.PipeServer.specToJson(spark, spec)
     assert(graft.server.PipeServer.specFromJson(spark, json) == spec)
   }
@@ -68,35 +68,6 @@ class ApiInstanceSpec extends SparkSpec {
     st.append(fine)
     val got = st.readIn(Seq(LocalDateTime.parse("2024-01-05T00:00:00.000001")))
     assert(got.count() == 1 && got.select("id").as[Long].head() == 9L)
-  }
-
-  test("windowed parallel fetch returns exactly the single-stream rows") {
-    // the bulk-read path (fetchParallelism > 1, default off): k ranged
-    // window URLs must partition [oldest, newest] with no loss or overlap,
-    // on a timestamp axis and an integer epoch axis alike
-    val st = mkStore("windowed")
-    st.create(df3)
-    val epochStore = new graft.storage.ApiStore(spark, TestPipeServer.server.url,
-      tmpDir(), PipeSpec(PipeKeys("api", "windowed_epoch"),
-        columns = ColumnRoles(Map("datetime" -> "ts", "id" -> "id")),
-        epochUnit = Some("second")))
-    epochStore.create((1L to 20L).map(i => (i * 100L, i)).toDF("ts", "id"))
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("id").as[Long].collect().sorted.toSeq
-    val prev = graft.storage.ApiStore.fetchParallelism
-    try {
-      graft.storage.ApiStore.fetchParallelism = 1
-      val single   = ids(st.read)
-      val singleE  = ids(epochStore.read)
-      val singleR  = ids(epochStore.readRange(Some(250L), Some(1500L)))
-      graft.storage.ApiStore.fetchParallelism = 4
-      assert(ids(st.read) == single)
-      assert(ids(epochStore.read) == singleE)
-      assert(ids(epochStore.readRange(Some(250L), Some(1500L))) == singleR)
-      assert(ids(epochStore.readRange(Some(250L), Some(1500L),
-        endInclusive = true)) == ids(epochStore.readRange(Some(250L),
-          Some(1500L)) ) ++ Seq(15L))
-    } finally graft.storage.ApiStore.fetchParallelism = prev
   }
 
   test("sync bookkeeping over HTTP: sync_time, epoch, maxid, dedup count") {

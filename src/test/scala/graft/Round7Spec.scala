@@ -181,49 +181,6 @@ class ProfileSpec extends SparkSpec {
   }
 }
 
-class SkewWiringSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("salted tagExisting equals the unsalted split exactly") {
-    val existing = Seq.tabulate(200)(i => (i.toLong % 5, i.toLong, s"old$i"))
-      .toDF("hot_key", "sub_id", "payload")
-    val incoming = Seq.tabulate(300)(i => (i.toLong % 5, i.toLong, s"new$i"))
-      .toDF("hot_key", "sub_id", "payload")
-    val keys = Seq("hot_key", "sub_id")
-    def collectTags(salt: Int) =
-      graft.ops.Diff.tagExisting(incoming, existing, keys, salt = salt)
-        .orderBy($"hot_key", $"sub_id")
-        .select($"hot_key", $"sub_id", $"__graft_update")
-        .as[(Long, Long, Boolean)].collect().toSeq
-    assert(collectTags(8) == collectTags(1))
-  }
-
-  test("spec extras.skew_salt routes through a full sync without changing results") {
-    val root = java.nio.file.Files.createTempDirectory("graft_salt").toString
-    val eng = new graft.sync.SyncEngine(spark, root)
-    def spec(name: String, extras: Map[String, String]) = graft.catalog.PipeSpec(
-      graft.catalog.PipeKeys("skew", name),
-      columns = graft.catalog.ColumnRoles(
-        Map("datetime" -> "ts", "id" -> "k")),
-      extras = extras)
-    val mk = (off: Int) => Seq.tabulate(500) { i =>
-      (java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 24}%02d:00:00"),
-       (i % 3).toLong, (i + off).toLong)
-    }.toDF("ts", "k", "v")
-    for ((name, ex) <- Seq(("plain", Map.empty[String, String]),
-                           ("salted", Map("skew_salt" -> "6")))) {
-      val sp = spec(name, ex)
-      eng.sync(sp, mk(0))
-      eng.sync(sp, mk(1000)) // same keys → updates
-    }
-    val a = eng.getData(spec("plain", Map.empty)).orderBy($"ts", $"k")
-      .as[(java.sql.Timestamp, Long, Long)].collect().toSeq
-    val b = eng.getData(spec("salted", Map("skew_salt" -> "6"))).orderBy($"ts", $"k")
-      .as[(java.sql.Timestamp, Long, Long)].collect().toSeq
-    assert(a == b)
-  }
-}
-
 class HistogramSpec extends SparkSpec {
   import spark.implicits._
 

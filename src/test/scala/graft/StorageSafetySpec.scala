@@ -168,6 +168,24 @@ class SwapRecoverySpec extends SparkSpec {
     assert(after == before, "legacy intent must roll forward, not destroy")
   }
 
+  test("a whole-dir .ready swap left by an earlier release rolls forward on open") {
+    // the earlier create/overwrite/compact renamed its complete tmp dir to
+    // `<tmp>.ready`, deleted data/ and renamed `.ready` in: a crash between
+    // the two leaves `.ready` as the only copy
+    val root = java.nio.file.Files.createTempDirectory("graft_swapready").toString
+    val (eng, spec) = mkPipe(root)
+    def rows(e: SyncEngine) = e.getData(spec).orderBy($"id")
+      .select($"id", $"v").as[(Long, String)].collect().toSeq
+    val before = rows(eng)
+    val base = java.nio.file.Paths.get(new graft.storage.PipeStorage(spark, root, spec).basePath)
+    Seq(".data_tmp.ready", ".compact_tmp.ready").foreach { ready =>
+      java.nio.file.Files.move(base.resolve("data"), base.resolve(ready))
+      assert(rows(new SyncEngine(spark, root)) == before, s"$ready must roll forward")
+      assert(java.nio.file.Files.isDirectory(base.resolve("data")))
+      assert(!java.nio.file.Files.exists(base.resolve(ready)))
+    }
+  }
+
   test("C-tagged (cleared) chunks roll forward to deletion on recovery") {
     val root = java.nio.file.Files.createTempDirectory("graft_swapcrash3").toString
     val (eng, spec) = mkPipe(root)
@@ -357,8 +375,8 @@ class WriterLeaseSpec extends SparkSpec {
   }
 
   test("two concurrent BLIND autoincrement syncs mint disjoint id ranges") {
-    // the blind path takes the mint lease inside syncBlind itself (not via
-    // sync()'s retry wrapper) — this pins the disjoint-base guarantee there
+    // a blind sync runs one attempt under the same mint lease as a diff
+    // sync's retry loop — this pins the disjoint-base guarantee there
     val root = tmpDir()
     val eng = new SyncEngine(spark, root)
     val spec = PipeSpec(PipeKeys("lease", "blind_ids"),
@@ -542,9 +560,11 @@ object CrashFs {
   }
 }
 
-/** Crash points of the file-level swap a located diff apply performs
-  * (intent "A <chunk>/<file>" moves, "D <chunk>/<file>" deletes), and a
-  * located file that vanishes between the diff and the apply. */
+/** Crash points of the file-level swap (intent "A <chunk>/<file>" moves,
+  * "D <chunk>/<file>" deletes) in every partitioned write that goes
+  * through it — a located diff apply, a create, a schema-promoting
+  * overwrite and a compact — and a located file that vanishes between
+  * the diff and the apply. */
 class FileSwapRecoverySpec extends SparkSpec {
   import spark.implicits._
 
@@ -561,52 +581,87 @@ class FileSwapRecoverySpec extends SparkSpec {
         .plusHours(6L * i)), i.toLong, if (changed(i)) s"v$i'" else s"v$i")
     }.toDF("ts", "id", "v")
 
-  /** Two syncs of history, then the batch under test: it re-sends ids
-    * 30-39 (half changed) and adds 40-59. */
-  private def setUp(root: String): Unit = {
-    val eng = new SyncEngine(spark, root)
+  /** Two syncs of history: ids 0-39, 16 and 18 changed. */
+  private def setUp(eng: SyncEngine): Unit = {
     eng.sync(spec, batch(0, 20))
     eng.sync(spec, batch(15, 25, changed = Set(16, 18)))
   }
+  /** Re-sends ids 30-39 (half changed) and adds 40-59. */
   private val last = batch(30, 30, changed = Set(30, 32, 34, 36, 38))
 
-  private def table(root: String): Seq[(Long, String)] =
-    new SyncEngine(spark, root).getData(spec).select($"id", $"v")
-      .as[(Long, String)].collect().sorted.toSeq
+  /** The history with a bigint column `x`; the same rows with `x` as a
+    * double promote the column, so their sync rewrites the table and
+    * then finds no delta: its only swap is the overwrite. */
+  private def withX(df: org.apache.spark.sql.DataFrame, t: String) =
+    df.withColumn("x", $"id".cast(t))
+  private def setUpX(eng: SyncEngine): Unit = {
+    eng.sync(spec, withX(batch(0, 20), "bigint"))
+    eng.sync(spec, withX(batch(15, 25, changed = Set(16, 18)), "bigint"))
+  }
+  private val promoting = withX(batch(0, 40, changed = Set(16, 18)), "double")
+
+  /** The table's schema and its rows, each row as text. */
+  private def table(root: String): (String, Seq[String]) = {
+    val df = new SyncEngine(spark, root).getData(spec)
+    (df.schema.simpleString, df.collect().map(_.toString).sorted.toSeq)
+  }
 
   private def intent(root: String) =
     new java.io.File(s"${root.stripPrefix("crashfs://")}/${spec.targetName}/.swap_intent")
 
-  private lazy val uninterrupted: Seq[(Long, String)] = {
-    val root = tmpDir()
-    setUp(root)
-    new SyncEngine(spark, root).sync(spec, last)
-    table(root)
+  private val points = Seq(
+    ("A", 1) -> "intent written, nothing moved",
+    ("A", 2) -> "some A files moved",
+    ("D", 1) -> "all A files moved, D pending",
+    ("intent", 1) -> "D done, intent still present")
+
+  /** An operation whose swap is crashed: its test-name prefix, what runs
+    * before it, the operation, the rows it leaves and the crash points
+    * it reaches (a create replaces no file, so it has no D step). */
+  private final class Op(val prefix: String, val before: SyncEngine => Unit,
+                         val run: SyncEngine => Unit, val rows: Int,
+                         val reached: Seq[(String, Int)] = points.map(_._1)) {
+    lazy val uninterrupted: (String, Seq[String]) = {
+      val root = tmpDir()
+      val eng = new SyncEngine(spark, root)
+      before(eng)
+      run(eng)
+      table(root)
+    }
   }
 
-  Seq(("A", 1) -> "intent written, nothing moved",
-      ("A", 2) -> "some A files moved",
-      ("D", 1) -> "all A files moved, D pending",
-      ("intent", 1) -> "D done, intent still present").foreach { case ((kind, n), what) =>
-    test(s"file-swap crash: $what — reopen + vacuum gives the uninterrupted table") {
-      val root = s"crashfs://${tmpDir()}"
-      setUp(root)
-      CrashFs.arm(kind, n)
-      try {
-        val e = intercept[Exception](new SyncEngine(spark, root, retries = 1).sync(spec, last))
-        assert(CrashFs.fired, s"crash point $kind #$n never reached: $e")
-      } finally CrashFs.disarm()
-      assert(intent(root).exists(), "the crash must leave the swap intent behind")
-      new SyncEngine(spark, root).storage(spec).vacuum()
-      assert(!intent(root).exists())
-      assert(table(root) == uninterrupted)
-      assert(uninterrupted.map(_._1) == (0L until 60L))
+  private val located = new Op("file-swap crash", setUp, _.sync(spec, last), 60)
+
+  Seq(located,
+      new Op("file-swap crash in create", _ => (), _.sync(spec, batch(0, 20)), 20,
+        points.map(_._1).filter(_._1 != "D")),
+      new Op("file-swap crash in overwrite", setUpX, { e =>
+        val r = e.sync(spec, promoting)
+        assert((r.inserted, r.updated) == ((0L, 0L)), "the promoting sync applied rows")
+      }, 40),
+      new Op("file-swap crash in compact", setUp, _.storage(spec).compact(), 40)
+  ).foreach { op =>
+    points.filter(p => op.reached.contains(p._1)).foreach { case ((kind, n), what) =>
+      test(s"${op.prefix}: $what — reopen + vacuum gives the uninterrupted table") {
+        val root = s"crashfs://${tmpDir()}"
+        op.before(new SyncEngine(spark, root))
+        CrashFs.arm(kind, n)
+        try {
+          val e = intercept[Exception](op.run(new SyncEngine(spark, root, retries = 1)))
+          assert(CrashFs.fired, s"crash point $kind #$n never reached: $e")
+        } finally CrashFs.disarm()
+        assert(intent(root).exists(), "the crash must leave the swap intent behind")
+        new SyncEngine(spark, root).storage(spec).vacuum()
+        assert(!intent(root).exists())
+        assert(table(root) == op.uninterrupted)
+        assert(op.uninterrupted._2.size == op.rows)
+      }
     }
   }
 
   test("a located file that vanished before the apply fails the attempt; the retry converges") {
     val root = tmpDir()
-    setUp(root)
+    setUp(new SyncEngine(spark, root))
     // the first apply finds its located files rewritten under it (a
     // compact between the diff and the apply renames every file)
     val compacted = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -627,7 +682,7 @@ class FileSwapRecoverySpec extends SparkSpec {
     assert(r.attempts == 2, r.attemptErrors)
     assert(r.attemptErrors.head.contains("vanished"), r.attemptErrors)
     assert((r.inserted, r.updated) == ((20L, 5L)))
-    assert(table(root) == uninterrupted, "no row lost or duplicated")
+    assert(table(root) == located.uninterrupted, "no row lost or duplicated")
   }
 }
 

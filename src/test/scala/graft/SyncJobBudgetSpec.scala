@@ -13,11 +13,12 @@ import graft.catalog.{ColumnRoles, PipeKeys, PipeSpec}
 import graft.JobCount.{describe, jobsOf}
 import graft.sync.{SyncEngine, SyncResult}
 
-/** Pins the cost of a steady-state diff sync — a batch with both updates
-  * and inserts against an existing table. The Spark job count is pinned
-  * on the parquet store and on the HTTP instance (`ApiStore`), client and
-  * server side; on parquet, so are the files and bytes a run of small
-  * syncs writes.
+/** Pins the cost of a steady-state sync — a batch with both updates and
+  * inserts against an existing table. The Spark job count is pinned for
+  * a diff sync on the parquet store, on `MemoryStore` and on the HTTP
+  * instance (`ApiStore`), client and server side, and for a blind and an
+  * upsert-mode sync on parquet; on parquet, so are the files and bytes a
+  * run of small diff syncs writes.
   * Every job the sync starts counts: AQE query stages, broadcasts, the
   * counts aggregate and the storage write ([[JobCount]]); the server
   * shares the session but runs on its own request threads, so its jobs
@@ -37,23 +38,49 @@ class SyncJobBudgetSpec extends SparkSpec {
   }
 
   /** The jobs of the third sync of a pipe — on the sync's thread and the
-    * others that ran meanwhile: a create, a warming diff sync (it fills
-    * what steady state keeps warm, the schema caches), then the counted
-    * diff sync with 2000 inserts and 100 updates. */
-  private def steadyStateJobs(eng: SyncEngine, name: String): (Seq[String], Seq[String]) = {
+    * others that ran meanwhile: a create, a warming sync (it fills what
+    * steady state keeps warm, the schema caches), then the counted sync
+    * of 2200 rows, 200 of them re-sent and 100 of those changed. A diff
+    * sync reports 2000 inserts and 100 updates. */
+  private def steadyStateJobs(eng: SyncEngine, name: String, upsert: Boolean = false,
+                              checkExisting: Boolean = true,
+                              expected: (Long, Long) = (2000L, 100L))
+      : (Seq[String], Seq[String]) = {
     val spec = PipeSpec(PipeKeys("budget", name),
-      columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")))
-    eng.sync(spec, events(0, 2000, _ => 0))
-    eng.sync(spec, events(1800, 4000, n => if (n < 2000 && n % 2 == 0) 1 else 0))
+      columns = ColumnRoles(Map("datetime" -> "ts", "primary" -> "event_id")),
+      upsert = upsert)
+    def sync(b: DataFrame) = eng.sync(spec, b, checkExisting)
+    sync(events(0, 2000, _ => 0))
+    sync(events(1800, 4000, n => if (n < 2000 && n % 2 == 0) 1 else 0))
     val (r, jobs, others) = jobsOf(spark)(
-      eng.sync(spec, events(3800, 6000, n => if (n < 4000 && n % 2 == 0) 1 else 0)))
-    assert((r.inserted, r.updated) == ((2000L, 100L)))
+      sync(events(3800, 6000, n => if (n < 4000 && n % 2 == 0) 1 else 0)))
+    assert((r.inserted, r.updated) == expected)
     (jobs, others)
   }
 
   test("a parquet diff sync with updates and inserts runs at most 12 jobs") {
     val (jobs, _) = steadyStateJobs(new SyncEngine(spark, tmpDir()), "events")
     assert(jobs.size <= 12, s"diff sync ran ${jobs.size} jobs: ${describe(jobs)}")
+  }
+
+  test("a parquet blind sync runs at most 1 job") {
+    val (jobs, _) = steadyStateJobs(new SyncEngine(spark, tmpDir()), "blind",
+      checkExisting = false, expected = (2200L, 0L))
+    assert(jobs.size <= 1, s"blind sync ran ${jobs.size} jobs: ${describe(jobs)}")
+  }
+
+  /** Upsert mode tags every batch row against the backtrack window, so
+    * the 200 re-sent rows all report as updates. */
+  test("a parquet upsert-mode sync runs at most 13 jobs") {
+    val (jobs, _) = steadyStateJobs(new SyncEngine(spark, tmpDir()), "upsert",
+      upsert = true, expected = (2000L, 200L))
+    assert(jobs.size <= 13, s"upsert sync ran ${jobs.size} jobs: ${describe(jobs)}")
+  }
+
+  test("a MemoryStore diff sync runs at most 14 jobs") {
+    val (jobs, _) = steadyStateJobs(new SyncEngine(spark, tmpDir(),
+      storeFactory = graft.storage.MemoryStore.factory), "memory")
+    assert(jobs.size <= 14, s"diff sync ran ${jobs.size} jobs: ${describe(jobs)}")
   }
 
   /** The client stages the batch (one job) and makes one call; the server

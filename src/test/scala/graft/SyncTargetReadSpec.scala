@@ -183,19 +183,8 @@ class SyncTargetReadSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll 
     val stored = events(0, 50, _ => 0)
     store.create(stored)
     val ddl = store.schemaDdl // warm the schema cache
-    val jobs = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val empty = try store.readIn(Seq.empty) finally {
-      org.apache.spark.GraftTestBus.waitUntilListenerBusEmpty(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get == 0)
+    val (empty, jobs, others) = JobCount.jobsOf(spark)(store.readIn(Seq.empty))
+    assert(jobs.isEmpty && others.isEmpty, JobCount.describe(jobs ++ others))
     assert(ddl.map(org.apache.spark.sql.types.StructType.fromDDL).contains(empty.schema))
     assert(empty.schema.fieldNames.toSeq == stored.columns.toSeq)
     assert(empty.isEmpty)
